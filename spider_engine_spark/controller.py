@@ -38,6 +38,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 from spider_engine_spark.operators.search import SearchFilter
+from spider_engine_spark.pins import scope
 from spider_engine_spark.plans.catalog import Catalog
 
 RET_OK, RET_FAILED, RET_ERROR = 0, 1, 2
@@ -99,37 +100,48 @@ def _to_filter(d: dict, field_types: dict | None = None) -> SearchFilter:
 
 
 class SpiderController:
-    """Handler logic, separated from HTTP plumbing (unit-testable)."""
+    """Handler logic, separated from HTTP plumbing (unit-testable).
+
+    Every route runs inside its own pins.scope(): whatever a request
+    pins (a search's narrow candidate set) is released once its
+    response is built, so a long-lived server does not accumulate
+    cached blocks."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.catalog = Catalog(spark, root)
         self._lock = threading.Lock()  # the reference serializes writes (C1)
 
     # -- routes ---------------------------------------------------------
+    @scope()
     def status(self) -> dict:
         return ok(self.catalog.status())
 
+    @scope()
     def create_database(self, db: str) -> dict:
         with self._lock:
             self.catalog.create_database(db)
         return ok()
 
+    @scope()
     def drop_database(self, db: str) -> dict:
         with self._lock:
             self.catalog.drop_database(db)
         return ok()
 
+    @scope()
     def create_table(self, db: str, table: str, fields_param: list) -> dict:
         fields = {f["name"]: f["type"] for f in fields_param}
         with self._lock:
             self.catalog.create_table(db, table, fields)
         return ok()
 
+    @scope()
     def drop_table(self, db: str, table: str) -> dict:
         with self._lock:
             self.catalog.drop_table(db, table)
         return ok()
 
+    @scope()
     def alter_table(self, db: str, table: str, body: dict) -> dict:
         op = body.get("type")
         if op not in ("addField", "delField"):
@@ -143,6 +155,7 @@ class SpiderController:
                 t.delete_field(fld["name"])
         return ok()
 
+    @scope()
     def add_doc(self, db: str, table: str, key: str, content: dict) -> dict:
         import uuid as _uuid
 
@@ -163,6 +176,7 @@ class SpiderController:
             return error("add failed (duplicate primary key?)")
         return ok(key)
 
+    @scope()
     def get_doc(self, db: str, table: str, key: str) -> dict:
         d = self.catalog.table(db, table).get_doc(key)
         if d is None:
@@ -170,6 +184,7 @@ class SpiderController:
         d.pop("doc_id", None)
         return ok({"Key": key, "Detail": d})
 
+    @scope()
     def update_doc(self, db: str, table: str, key: str, content: dict) -> dict:
         with self._lock:
             found = self.catalog.table(db, table).update_doc(key, content)
@@ -179,11 +194,13 @@ class SpiderController:
             return error(f"can not find the doc {key}, update failed")
         return ok(key)
 
+    @scope()
     def delete_doc(self, db: str, table: str, key: str) -> dict:
         with self._lock:
             found = self.catalog.table(db, table).delete_doc(key)
         return ok() if found else error("document not found")
 
+    @scope()
     def search(self, p: dict) -> dict:
         t = self.catalog.table(p["database"], p["table"])
         filters = [_to_filter(f, t.fields) for f in p.get("filters") or []]

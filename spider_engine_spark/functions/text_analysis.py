@@ -18,6 +18,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from spider_engine_spark.functions.hashes import md5_h60_col
+from spider_engine_spark.pins import pin
 
 STOPWORDS = {
     "en": ["the", "a", "and", "of", "to", "in", "is", "it"],
@@ -501,9 +502,7 @@ def token_rarity(df, key: str, content: str):
     # corpus, and tc is persisted because it feeds both that roll-up
     # and the join below (plain evictable cache, lineage retained) —
     # the former shape tokenized the corpus twice
-    tc = toks.groupBy(key, "term").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).persist()
+    tc = pin(toks.groupBy(key, "term").agg(F.count(F.lit(1)).alias("cnt")))
     lm = tc.groupBy("term").agg(F.sum("cnt").alias("df_"))
     per_doc = (
         tc.join(F.broadcast(lm), "term")
@@ -595,11 +594,10 @@ def collocations_pmi(
     # persisted: the unigram table hydrates BOTH bigram endpoints (w1
     # and w2 joins) — without the cache the tokenize + count subtree is
     # evaluated twice (plain evictable cache, lineage retained)
-    uni = (
+    uni = pin(
         exploded_tokens(df, key, content)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c_w"))
-        .persist()
     )
     return (
         cxy.join(uni.select(F.col("term").alias("w1"), F.col("c_w").alias("c_x")), "w1")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spider_engine_spark.functions.hashes import md5_h60_col
+from spider_engine_spark.pins import pin, release
 
 TOKEN_SPLIT = r"\s+"
 
@@ -184,8 +185,8 @@ def minhash_lsh_pairs(
     shingle → k min-hash aggs) — the static plan carries the subtree
     twice and no ReusedExchange applies across the broadcast/stream
     sides. Plain evictable cache (narrow (key, band, bucket) rows),
-    lineage retained; it lives until eviction or session end."""
-    exploded = band_buckets(sigs, key, bands).persist()
+    lineage retained, held by the caller's pins.scope()."""
+    exploded = pin(band_buckets(sigs, key, bands))
     if cap_bucket_size is not None:
         counts = exploded.groupBy("band", "bucket").agg(
             F.count("*").alias("bsz")
@@ -223,7 +224,7 @@ def shared_shingle_pairs(
     self-join sides (and the hot-shingle counts under max_df) — without
     the cache each consumer re-tokenizes and re-shingles the corpus.
     Plain evictable cache, lineage retained."""
-    sh = exploded_shingles(df, key, content, n).persist()
+    sh = pin(exploded_shingles(df, key, content, n))
     extra = None
     if max_df is not None:
         hot = (
@@ -274,11 +275,7 @@ def jaccard_verify(
     endpoints, and without the cache each hydration join re-tokenizes
     and re-shingles the corpus. Plain evictable cache, lineage
     retained."""
-    sh = (
-        with_shingles(df, content, n, "sh")
-        .select(F.col(key), "sh")
-        .persist()
-    )
+    sh = pin(with_shingles(df, content, n, "sh").select(F.col(key), "sh"))
     out = (
         pairs.join(sh.withColumnRenamed(key, "a").withColumnRenamed("sh", "sh_a"), "a")
         .join(sh.withColumnRenamed(key, "b").withColumnRenamed("sh", "sh_b"), "b")
@@ -346,7 +343,7 @@ def simhash_pairs(
     # the 60 conditional-sum aggregates) — the static plan carries that
     # subtree twice with no ReusedExchange. Plain evictable cache of
     # narrow (key, sim, chunk_id, chunk) rows, lineage retained.
-    chunks = withsim.select(
+    chunks = pin(withsim.select(
         key,
         "sim",
         F.posexplode(
@@ -357,7 +354,7 @@ def simhash_pairs(
                 ]
             )
         ).alias("chunk_id", "chunk"),
-    ).persist()
+    ))
     a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
         a.join(
@@ -560,35 +557,27 @@ def connected_components(
     `nodes` (single-column DataFrame named `key`) adds isolated nodes as
     singleton components; pair endpoints are always included regardless.
 
-    In localCheckpoint mode, every intermediate snapshot's blocks are
-    dropped as soon as the next round supersedes it; only the RETURNED
-    label snapshot stays pinned (a localCheckpoint cannot recompute
-    once its blocks are dropped).  DataFrame.unpersist() is a NO-OP for
-    localCheckpoint blocks (they live at the RDD layer, not the Dataset
-    cache manager), so superseded snapshots are freed by their own RDD
-    id — read off the checkpointed frame's LogicalRDD plan, never a
-    storage-info diff, so a concurrent job caching in a shared session
-    can never have its blocks captured and dropped by this loop.
+    In localCheckpoint mode, every intermediate snapshot is released as
+    soon as the next round supersedes it; only the RETURNED label
+    snapshot stays pinned, in the caller's pins.scope().
     """
-    spark = pairs.sparkSession
     if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-        def snap(df: DataFrame) -> tuple[DataFrame, int | None]:
-            return df.checkpoint(), None
+        def snap(df: DataFrame) -> DataFrame:
+            return df.checkpoint()
 
     else:
 
-        def snap(df: DataFrame) -> tuple[DataFrame, int | None]:
-            d = df.localCheckpoint()
-            return d, _ckpt_rdd_id(d)
+        def snap(df: DataFrame) -> DataFrame:
+            return pin(df, snapshot=True)
 
     und = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     # pin the edge list: it is re-joined EVERY round, and the pair
     # generator feeding it (minhash/simhash verify) is the expensive
     # part — without this the candidate pipeline re-runs per round
     # (measured 11.1 s -> ~7 s for dedup_clusters at sf0.1)
-    und, und_id = snap(
+    und = snap(
         und.unionByName(
             und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct()
@@ -596,7 +585,7 @@ def connected_components(
     endpoints = und.select(F.col("src").alias(key)).distinct()
     if nodes is not None:
         endpoints = nodes.select(key).unionByName(endpoints).distinct()
-    lab, lab_id = snap(endpoints.select(F.col(key), F.col(key).alias("comp")))
+    lab = snap(endpoints.select(F.col(key), F.col(key).alias("comp")))
     for _ in range(max_iter):
         msgs = und.join(
             lab.select(F.col(key).alias("dst"), "comp"), "dst"
@@ -608,7 +597,7 @@ def connected_components(
             .agg(F.min("comp").alias("comp"))
         )
         jump = upd.select(F.col(key).alias("_jk"), F.col("comp").alias("_jc"))
-        upd, upd_id = snap(
+        upd = snap(
             upd.join(jump, upd["comp"] == jump["_jk"], "left")
             .select(F.col(key), F.coalesce("_jc", "comp").alias("comp"))
         )
@@ -618,50 +607,16 @@ def connected_components(
             .filter(F.col("_new") < F.col("comp"))
             .count()
         )
-        _drop_checkpoint_blocks(spark, {lab_id})  # superseded snapshot
-        lab, lab_id = upd, upd_id
+        release(lab)  # superseded snapshot
+        lab = upd
         if changed == 0:
-            _drop_checkpoint_blocks(spark, {und_id})
+            release(und)
             return lab
-    _drop_checkpoint_blocks(spark, {und_id, lab_id})
+    release(und)
+    release(lab)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )
-
-
-def _ckpt_rdd_id(df: DataFrame) -> int:
-    """The block-manager RDD id behind a just-localCheckpointed frame.
-
-    A checkpointed Dataset's analyzed plan is a LogicalRDD wrapping
-    exactly the internal RDD whose blocks localCheckpoint pinned; the
-    case-class accessor exposes it through py4j.  Reading the id off
-    the frame ITSELF (rather than diffing getRDDStorageInfo around the
-    call) is safe in a shared SparkSession: concurrent jobs'
-    cache/checkpoint activity can never leak into the captured set.
-    """
-    return df._jdf.queryExecution().analyzed().rdd().id()
-
-
-def _pinned_rdd_ids(spark) -> set[int]:
-    """Ids of RDDs currently holding blocks in the block manager."""
-    return {
-        r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-
-
-def _drop_checkpoint_blocks(spark, ids: set[int | None]) -> None:
-    """Free the block-manager snapshots behind superseded
-    localCheckpoints, by RDD id (from _ckpt_rdd_id).  The frame is
-    unusable afterwards — only superseded snapshots go here.  None ids
-    (reliable-checkpoint mode, where nothing is block-pinned) are
-    ignored."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        if i is None:
-            continue
-        jrdd = jmap.get(i)
-        if jrdd is not None:
-            jrdd.unpersist(False)
 
 
 def canonical_corpus(
@@ -689,13 +644,11 @@ def canonical_corpus(
     autoBroadcastJoinThreshold) — the small-drop-list fast path is
     preserved without baking in the unsafe assumption.
 
-    The caller should .unpersist() nothing: the component snapshot is
-    dropped here once the drop-list is derived... except the returned
-    frame still needs it lazily, so it is pinned like
-    connected_components documents — materialize (write/cache) then
-    unpersist if the session is long-lived.  checkpoint_dir passes
-    through to connected_components (reliable executor-loss-safe round
-    snapshots for cluster runs)."""
+    The returned frame reads the component snapshot lazily, so that
+    snapshot stays pinned in the caller's pins.scope(), as
+    connected_components documents.  checkpoint_dir passes through to
+    connected_components (reliable executor-loss-safe round snapshots
+    for cluster runs)."""
     comp = connected_components(
         pairs, a="a", b="b", key=key, checkpoint_dir=checkpoint_dir
     )
@@ -810,7 +763,7 @@ def exact_substring_dedup(
     # transform is the expensive rung). Plain evictable cache, lineage
     # retained; the intermediate _xs_md5s column is dropped first so
     # the cached bytes are tokens + gram ids only.
-    d = d.persist()
+    d = pin(d)
     occ = d.select(
         F.col(key),
         F.posexplode_outer("_xs_grams").alias("pos", "g"),
@@ -939,19 +892,31 @@ def semantic_dedup_pairs(
     shared_shingle_pairs' hot-shingle cap) — at web scale prefer
     re-fitting with larger k over raising the cap. The size side of
     that join is <= k rows, hence broadcast."""
+    return _semantic_pairs(df, key, vec, centroids, threshold, max_cluster)[0]
+
+
+def _semantic_pairs(
+    df: DataFrame,
+    key: str,
+    vec: str,
+    centroids: list[list[float]],
+    threshold: float,
+    max_cluster: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """semantic_dedup_pairs' pairs, plus the pinned assignment frame
+    they read (so semantic_dedup can release it early)."""
     from spider_engine_spark.operators.similarity import ivf_assign
 
     # the assignment pass (k cosine folds per row) feeds BOTH sides of
     # the self-join (plus the sizes agg under max_cluster) — persist it
     # so it computes once. Plain evictable cache, lineage retained
-    # (executor-loss-safe); riding on the returned frame so
-    # semantic_dedup can release it once the components are snapped.
+    # (executor-loss-safe).
     # keep_norm: the row norms ride in the cache so the pair filter
     # below folds ONE dot product per pair instead of dot + two norms
     # (bit-identical — dot / (na * nb) with the same fold shapes).
-    cached = ivf_assign(
-        df.select(key, vec), key, vec, centroids, keep_norm="_nv"
-    ).persist()
+    cached = pin(
+        ivf_assign(df.select(key, vec), key, vec, centroids, keep_norm="_nv")
+    )
     assigned = cached
     if max_cluster is not None:
         sizes = assigned.groupBy("ivf_list").agg(
@@ -992,10 +957,7 @@ def semantic_dedup_pairs(
         )
         .select("a", "b")
     )
-    # attach the PERSISTED frame (under max_cluster `assigned` rebinds
-    # to an unpersisted derived frame — unpersisting that is a no-op)
-    pairs._spider_assigned = cached
-    return pairs
+    return pairs, cached
 
 
 def semantic_dedup(
@@ -1017,7 +979,7 @@ def semantic_dedup(
     centroid-similarity heuristic so results are reproducible
     independent of the fitted centroids. checkpoint_dir as in
     connected_components (reliable snapshots for cluster runs)."""
-    pairs = semantic_dedup_pairs(
+    pairs, assigned = _semantic_pairs(
         df, key, vec, centroids, threshold, max_cluster
     )
     kept = canonical_corpus(
@@ -1027,7 +989,7 @@ def semantic_dedup(
     # canonical_corpus, so the assignment cache has served its purpose
     # — release it (the returned frame reads only df + the component
     # snapshot, never the pairs pipeline)
-    pairs._spider_assigned.unpersist()
+    release(assigned)
     return kept
 
 
@@ -1111,7 +1073,7 @@ def paragraph_dedup(
     # anti-join left side — without a cache each consumer re-splits and
     # re-hashes every paragraph. Plain evictable cache, lineage
     # retained.
-    occ = occ.withColumn("_pd_id", packed).persist()
+    occ = pin(occ.withColumn("_pd_id", packed))
     dup = (
         occ.groupBy("_pd_g1", "_pd_g2")
         .agg(

@@ -51,6 +51,7 @@ from spider_engine_spark import webmodel as wm
 from spider_engine_spark.functions.hashes import md5_h60_col
 from spider_engine_spark.operators import seenset
 from spider_engine_spark.operators.postings import aggregate_postings, merge_postings
+from spider_engine_spark.pins import pin, release, scope
 from spider_engine_spark.sources.tableio import TableIO
 
 SPAN_SCHEMA = ArrayType(
@@ -589,8 +590,8 @@ class CrawlJob:
         # the re-shard is consumed by up to three passes (validation agg,
         # seen rewrite, filter-rebuild cogroup): persist so the seen scan
         # + re-hash runs once, not per consumer
-        reshard = reshard.persist()
-        try:
+        with scope():
+            reshard = pin(reshard)
             worst = (
                 reshard.groupBy("shard")
                 .agg(F.count("*").alias("n"))
@@ -645,8 +646,6 @@ class CrawlJob:
                     "layout_epoch": epoch,
                 },
             )
-        finally:
-            reshard.unpersist()
         return cls(spark, root)
 
     def _revert_orphans(self) -> None:
@@ -729,7 +728,7 @@ class CrawlJob:
             # localCheckpoint truncates the logical plan (lineage would
             # grow multiplicatively across supersteps and blow up the
             # optimizer); lazy so the first consumer materializes it
-            df = df.localCheckpoint(eager=False)
+            df = pin(df, snapshot=True, eager=False)
         self._mem[name] = df
         cached = df
         if old is not None:
@@ -760,17 +759,25 @@ class CrawlJob:
                 name, df, mode="overwrite", meta=meta,
                 partition_by=part,
             )
-        # re-point memory at the durable snapshots so lineage is cut
-        for name in list(self._mem):
-            self._mem[name].unpersist()
+        # re-point memory at the durable snapshots so lineage is cut.
+        # Nothing reads the in-memory state or the frames retired since
+        # the last checkpoint any more: release them all. (Between
+        # checkpoints a retired frame may still feed a lazy snapshot,
+        # such as the docs union, that only this commit materializes.)
+        for df in [*self._mem.values(), *self._postings_pieces]:
+            release(df)
+        self._release_retired(keep=0)
         self._mem.clear()
+        self._postings_pieces.clear()
+
+    def _release_retired(self, keep: int) -> None:
+        while len(self._retired) > keep:
+            for df in self._retired.pop(0):
+                release(df)
 
     def flush(self) -> None:
         if self.checkpoint_every != 1:
             self._checkpoint()
-            for df in self._postings_pieces:
-                df.unpersist()
-            self._postings_pieces.clear()
 
     def _migrate_attr_law(self, frontier_meta: dict) -> None:
         """Re-derive persisted priority/budget after an attribute-law
@@ -864,7 +871,7 @@ class CrawlJob:
             self._revert_orphans()
         frontier = self._get("frontier")
 
-        batch = select_fetch_batch(frontier, self.salts).cache()
+        batch = pin(select_fetch_batch(frontier, self.salts))
         n_batch = batch.count()
         mark("select_batch")
         if n_batch == 0:
@@ -877,6 +884,7 @@ class CrawlJob:
             if self.checkpoint_every == 1:
                 self.io.write("frontier", frontier, meta=self._frontier_meta)
             self.step_no += 1
+            release(batch)
             return metrics
 
         # fetch: make_doc runs exactly once — durable mode commits the
@@ -895,8 +903,8 @@ class CrawlJob:
                 F.col("fetch_step") == step
             )
         else:
-            docs = fetch_docs(batch, step, self.cfg).localCheckpoint(
-                eager=False
+            docs = pin(
+                fetch_docs(batch, step, self.cfg), snapshot=True, eager=False
             )
             self._put("docs", docs, append=True)
             self._retired_current.append(docs)
@@ -938,9 +946,9 @@ class CrawlJob:
         hosts_df = None
         if self.host_cache and ("hosts" in self._mem or self.io.exists("hosts")):
             hosts_df = self._get("hosts")
-        enriched = enrich_candidates(
-            raw_links, self.cfg, host_attrs=hosts_df
-        ).cache()
+        enriched = pin(
+            enrich_candidates(raw_links, self.cfg, host_attrs=hosts_df)
+        )
         # ONE action for robots counts + link counts + the candidate
         # count: n_cand == |distinct allowed urls| == the size of the
         # groupBy(url) below, so counting it here saves the separate
@@ -1002,8 +1010,10 @@ class CrawlJob:
                 F.first("budget").alias("budget"),
             )
         )
-        cand = seenset.with_shard(cand, "url", self.num_shards).localCheckpoint(
-            eager=False
+        cand = pin(
+            seenset.with_shard(cand, "url", self.num_shards),
+            snapshot=True,
+            eager=False,
         )
         self._retired_current.append(cand)
 
@@ -1011,9 +1021,11 @@ class CrawlJob:
         # minimal-traffic probe: only (shard, hash) crosses into Python;
         # the maybe-set is tiny (true dups + cuckoo FPs) and AQE
         # broadcasts it in the splits below
-        maybe_hashes = seenset.probe_hashes(
-            cand.select("shard", "hash"), state
-        ).localCheckpoint(eager=False)
+        maybe_hashes = pin(
+            seenset.probe_hashes(cand.select("shard", "hash"), state),
+            snapshot=True,
+            eager=False,
+        )
         self._retired_current.append(maybe_hashes)
         definitely_new = cand.join(
             maybe_hashes, ["shard", "hash"], "left_anti"
@@ -1073,7 +1085,7 @@ class CrawlJob:
             self.io.write("admitted", admitted, meta={"step": step + 1})
             admitted = self.io.read(spark, "admitted")
         else:
-            admitted = admitted.localCheckpoint(eager=False)
+            admitted = pin(admitted, snapshot=True, eager=False)
             self._retired_current.append(admitted)
         mark("admit_write")
 
@@ -1225,7 +1237,7 @@ class CrawlJob:
                 # materialize this step's postings NOW (cache+count): the
                 # tokenize graft is part of the superstep's work, and the
                 # cached per-step pieces keep the union lineage flat
-                step_postings = index_docs(docs).cache()
+                step_postings = pin(index_docs(docs))
                 step_postings.count()
                 self._put(
                     "postings", step_postings, append=True, checkpoint=False
@@ -1238,19 +1250,18 @@ class CrawlJob:
             self.io.write("frontier", new_frontier, meta=self._frontier_meta)
             mark("frontier_write")
         self.step_no += 1
-        if self.checkpoint_every > 1 and self.step_no % self.checkpoint_every == 0:
+        self._retired.append(self._retired_current)
+        if self.checkpoint_every == 1:
+            # retire superseded state lazily (one step late, so any
+            # still-running lazy consumers read from cache, not recompute)
+            self._release_retired(keep=2)
+        elif self.step_no % self.checkpoint_every == 0:
             self._checkpoint()
             mark("checkpoint")
         metrics["phases"] = phases
         metrics["duration_sec"] = time.monotonic() - t0
-        batch.unpersist()
-        enriched.unpersist()
-        # retire superseded cached state lazily (one step late, so any
-        # still-running lazy consumers read from cache, not recompute)
-        self._retired.append(self._retired_current)
-        if len(self._retired) > 2:
-            for df in self._retired.pop(0):
-                df.unpersist()
+        release(batch)
+        release(enriched)
         return metrics
 
     def run(self, n_steps: int) -> list[dict]:

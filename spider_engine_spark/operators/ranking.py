@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spider_engine_spark.pins import pin, release
+
 _PID = "__rank_pid"
 _LRN = "__rank_local"
 
@@ -45,22 +47,17 @@ def with_global_ranks(
     `order_by`, computed without a single-partition window.  Returns
     (frame, total row count).
 
-    Snapshot lifecycle (same contract as connected_components):
-    checkpoint_dir=None pins ONE localCheckpoint per call (the ranked
-    frame the result reads lazily); its RDD id rides on the returned
-    frame as `_spider_pinned_rdd_id`, and release_global_ranks(frame)
-    frees the blocks once the result is materialized — long-lived
-    shared sessions (REST controller) should call it.  Passing a
-    checkpoint_dir uses reliable df.checkpoint() instead: nothing is
-    block-pinned and the snapshot survives executor loss; the caller
-    owns the dir's lifecycle.
+    Snapshot lifecycle: checkpoint_dir=None pins ONE localCheckpoint per
+    call (the ranked frame the result reads lazily) in the caller's
+    pins.scope(), which frees it once the result is materialized.
+    Passing a checkpoint_dir uses reliable df.checkpoint() instead:
+    nothing is block-pinned and the snapshot survives executor loss;
+    the caller owns the dir's lifecycle.
 
     Ties across `order_by` are split arbitrarily-but-deterministically
     within a partition (row_number semantics); pass a tiebreak column
     (as the global-window form needs anyway) for full determinism.
     """
-    from spider_engine_spark.operators.dedup import _ckpt_rdd_id
-
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -68,7 +65,7 @@ def with_global_ranks(
     # boundaries, so the input pipeline is otherwise evaluated twice
     # (sampling pass + the real shuffle). Plain evictable cache,
     # lineage retained.
-    df = df.persist()
+    df = pin(df)
     w = Window.partitionBy(_PID).orderBy(*order_by)
     ranked = (
         df.repartitionByRange(num_partitions, *order_by)
@@ -80,15 +77,13 @@ def with_global_ranks(
     # of rows to partitions
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        ranked, pinned = ranked.checkpoint(), None
+        ranked = ranked.checkpoint()
     else:
-        ranked = ranked.localCheckpoint()
-        pinned = _ckpt_rdd_id(ranked)
+        ranked = pin(ranked, snapshot=True)
     # the input cache served its purpose the moment the ranked frame
     # was (eagerly) checkpointed — release it so the only retained
-    # snapshot is the checkpoint itself (blocking, so callers observing
-    # the block manager see exactly one pinned snapshot)
-    df.unpersist(True)
+    # snapshot is the checkpoint itself
+    release(df)
     counts = {
         r[_PID]: r["cnt"]
         for r in ranked.groupBy(_PID).agg(F.count("*").alias("cnt")).collect()
@@ -99,31 +94,17 @@ def with_global_ranks(
         offsets.append((pid, acc))
         acc += counts[pid]
     if not offsets:
-        res = ranked.withColumn(out, F.lit(None).cast("long")).drop(
-            _PID, _LRN
+        return (
+            ranked.withColumn(out, F.lit(None).cast("long")).drop(_PID, _LRN),
+            0,
         )
-        res._spider_pinned_rdd_id = pinned
-        return res, 0
     off = spark.createDataFrame(offsets, f"{_PID} int, __rank_off long")
     res = (
         ranked.join(F.broadcast(off), _PID)
         .withColumn(out, (F.col("__rank_off") + F.col(_LRN)).cast("long"))
         .drop(_PID, _LRN, "__rank_off")
     )
-    res._spider_pinned_rdd_id = pinned
     return res, total
-
-
-def release_global_ranks(frame: DataFrame) -> None:
-    """Free the localCheckpoint blocks behind a with_global_ranks /
-    distributed_ntile result.  Call AFTER materializing (collect/write)
-    — the frame is unusable afterwards.  No-op for reliable-checkpoint
-    results and frames from other sources."""
-    from spider_engine_spark.operators.dedup import _drop_checkpoint_blocks
-
-    pinned = getattr(frame, "_spider_pinned_rdd_id", None)
-    if pinned is not None:
-        _drop_checkpoint_blocks(frame.sparkSession, {pinned})
 
 
 def distributed_ntile(
@@ -168,9 +149,4 @@ def distributed_ntile(
         ).otherwise(
             F.expr(f"{rem} + (__rank_r - {head} + {q - 1}) DIV {q}")
         )
-    res = ranked.withColumn(out, bucket.cast("long")).drop("__rank_r")
-    # propagate the snapshot handle (see with_global_ranks docstring)
-    res._spider_pinned_rdd_id = getattr(
-        ranked, "_spider_pinned_rdd_id", None
-    )
-    return res
+    return ranked.withColumn(out, bucket.cast("long")).drop("__rank_r")

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spider_engine_spark.operators.postings import GOD_FIELD, query_term
+from spider_engine_spark.pins import pin
 
 MAX_INT64 = (1 << 63) - 1
 DEFAULT_PAGE = 100  # table.go:1030-1038
@@ -265,33 +266,23 @@ def search(
     filters: Sequence[SearchFilter] = (),
     offset: int = 0,
     size: int = 0,
-    max_doc: int | None = None,
+    *,
+    max_doc: int,
     doc_id: str = "doc_id",
     deleted: DataFrame | None = None,
     numeric_fields: set[str] | None = None,
     term_buckets: int | None = None,
     keep_total: bool = False,
-    df_source: str = "count",
 ) -> DataFrame:
     """Full search: returns the hydrated ranked page with a `score` column.
 
     search_field '' routes to the god field (table.go:997-1000);
     keyword '' is a full range scan with weight 0 (partition.go:701-704).
     max_doc is the table's NextDocId (pass row-count for dense ids).
+    df = |filtered candidate set|, the reference's semantics
+    (table.go:1116). A term no live row holds returns an empty page.
 
-    df_source: where the TF-IDF df statistic comes from.
-    - 'count' (default): |filtered candidate set| — the reference's
-      exact semantics (df = |result set after filters|, table.go:1116)
-      and the only correct choice when filters or deletes can shrink
-      the set.
-    - 'postings': by the writer invariant (every posting doc exists in
-      base, add_docs_df docstring) an unfiltered candidate set has
-      |candidates| == the postings df statistic, so both sources now
-      share one code path: the candidate set is materialized ONCE as
-      narrow (doc_id, weight) rows, its count IS df, and nothing is
-      evaluated twice. The parameter is kept for callers that document
-      intent; with filters/deletes/empty-keyword both behave as
-      'count'.
+    The narrow candidate set is pinned in the caller's pins.scope().
 
     Plan shape: filters hydrate against the forward index as before,
     but ranking runs over the narrow persisted (doc_id, weight) set —
@@ -305,8 +296,6 @@ def search(
     """
     fld = search_field or GOD_FIELD
     numeric_fields, temporal_types = _schema_kinds(base, numeric_fields)
-    if max_doc is None:
-        max_doc = base.count()
 
     if keyword == "":
         cand = base.select(
@@ -326,14 +315,18 @@ def search(
     # materialized candidates (plain evictable cache, lineage retained)
     # and emitted as a literal — no stats broadcast, no second
     # evaluation of the candidate subplan.
-    narrow = hydrated.select("doc_id", "weight").persist()
+    narrow = pin(hydrated.select("doc_id", "weight"))
     df_count = narrow.count()
-    scored = narrow.withColumn(
-        "score",
-        tfidf_score(
-            F.col("weight"), max_doc, F.lit(df_count).cast("long")
-        ),
-    ).withColumn("df_", F.lit(df_count).cast("long"))
+    # df = 0 means there is no row to score, and the literal
+    # log10(max_doc / 0) would fail constant folding under ANSI
+    score = (
+        tfidf_score(F.col("weight"), max_doc, F.lit(df_count).cast("long"))
+        if df_count
+        else F.lit(None).cast("long")
+    )
+    scored = narrow.withColumn("score", score).withColumn(
+        "df_", F.lit(df_count).cast("long")
+    )
     page = _rank_clamp_page(
         scored, "df_", offset, size, keep_total, drop_cols=("weight",)
     )
@@ -369,7 +362,8 @@ def search_multi(
     filters: Sequence[SearchFilter] = (),
     offset: int = 0,
     size: int = 0,
-    max_doc: int | None = None,
+    *,
+    max_doc: int,
     doc_id: str = "doc_id",
     deleted: DataFrame | None = None,
     numeric_fields: set[str] | None = None,
@@ -415,8 +409,6 @@ def search_multi(
         raise ValueError(f"unknown multi-term mode {mode!r}")
     fld = search_field or GOD_FIELD
     numeric_fields, temporal_types = _schema_kinds(base, numeric_fields)
-    if max_doc is None:
-        max_doc = base.count()
     buckets = term_buckets if term_buckets is not None else TERM_BUCKETS
 
     if mode == "or":
@@ -435,7 +427,7 @@ def search_multi(
     # (doc_id, score) candidates once for the clamp total, rank the
     # narrow rows, and hydrate only the final page (broadcast) —
     # column order preserved: doc_id, score, base columns[, _total].
-    narrow = hydrated.select("doc_id", "score").persist()
+    narrow = pin(hydrated.select("doc_id", "score"))
     total = narrow.count()
     with_total = narrow.withColumn("total_", F.lit(total).cast("long"))
     page = _rank_clamp_page(with_total, "total_", offset, size, keep_total)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spider_engine_spark.operators.dedup import cosine_col
+from spider_engine_spark.pins import pin, scope
 
 
 def make_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -254,17 +255,21 @@ def kmeans_centroids(
     aggregation; only the k x dim centroid matrix ever reaches the
     driver. An empty list keeps its previous centroid.
 
-    The feature frame is PERSISTED for the duration of the fit (the
+    NULL vector elements: ivf_assign gives a vector with a NULL element
+    no cosine to any centroid, so it lands in list -1 and moves no
+    centroid. Each coordinate is the mean over the list's non-NULL
+    values in that dimension; a dimension with none keeps the previous
+    coordinate.
+
+    The feature frame is PINNED for the duration of the fit (the
     iterative-op law: without it, the seed pass plus every Lloyd
     iteration re-derives the whole upstream pipeline — scan, unions,
     transformations — once per pass; measured ~2x on the semdedup
     bench input) and released before returning. Plain evictable cache,
     lineage retained (executor-loss-safe).
     """
-    base = df.select(
-        F.col(key).alias("_k"), F.col(vec).alias("_v")
-    ).persist()
-    try:
+    with scope():
+        base = pin(df.select(F.col(key).alias("_k"), F.col(vec).alias("_v")))
         cents = sample_centroids(base, "_v", k, "_k")
         dim = len(cents[0]) if cents else 0
         for _ in range(iters):
@@ -272,13 +277,13 @@ def kmeans_centroids(
             # update step as dim per-element column sums in ONE
             # groupBy(ivf_list) — map-side combinable, k rows shuffled
             # per map partition. The former posexplode shape shuffled
-            # N×dim (list, dim, x) rows per pass. Value law unchanged:
-            # per-dim decimal(28,10) sum (exact, order-independent) cast
-            # double, divided by the list count — the division happens
+            # N×dim (list, dim, x) rows per pass. Per-dim decimal(28,10)
+            # sum (exact, order-independent) cast double, divided
             # driver-side in Python, where float IS the same IEEE double
-            # division the old in-plan `double / count` performed.
+            # division an in-plan `double / count` performs.
             rows = (
-                assigned.groupBy("ivf_list")
+                assigned.filter(F.col("ivf_list") >= 0)
+                .groupBy("ivf_list")
                 .agg(
                     *[
                         F.sum(
@@ -288,9 +293,9 @@ def kmeans_centroids(
                         .alias(f"_s{d}")
                         for d in range(dim)
                     ],
-                    # per-dim counts, not one per-list count: the old
-                    # posexplode groupBy(list, dim) counted each dim's
-                    # own non-null population
+                    # per-dim counts of non-NULL elements (the former
+                    # posexplode shape divided by the row count,
+                    # NULL elements included)
                     *[
                         F.count(F.col("_v")[d]).alias(f"_n{d}")
                         for d in range(dim)
@@ -300,13 +305,13 @@ def kmeans_centroids(
             )
             new_cents = [list(c) for c in cents]  # empty lists keep centroid
             for r in rows:
+                old = cents[r["ivf_list"]]
                 new_cents[r["ivf_list"]] = [
-                    r[f"_s{d}"] / r[f"_n{d}"] for d in range(dim)
+                    r[f"_s{d}"] / r[f"_n{d}"] if r[f"_n{d}"] else old[d]
+                    for d in range(dim)
                 ]
             cents = new_cents
         return cents
-    finally:
-        base.unpersist()
 
 
 def ivf_inertia(df: DataFrame, key: str, vec: str, cents: list[list[float]]) -> float:

@@ -46,6 +46,7 @@ from spider_engine_spark.operators.search import (
     SearchFilter,
     search as search_op,
 )
+from spider_engine_spark.pins import pin, scope
 from spider_engine_spark.sources.tableio import TableIO
 
 FIELD_TYPES = {
@@ -196,6 +197,7 @@ class Table:
         )
         return self.add_docs_df(raw)
 
+    @scope()
     def add_docs_df(self, raw: DataFrame) -> tuple[int, int]:
         """Distributed batch insert: one atomic commit per batch (the
         reference's serialized per-doc AddDoc + flush, C1/S1, as a
@@ -206,18 +208,18 @@ class Table:
         - rows with untypeable number/time values still consume a docId
           and are tombstoned (M3 burned-docId consistency).
 
-        INVARIANT (search df_source='postings' depends on it): every
-        doc_id referenced by a postings row exists in the base table, and
-        any path that removes/hides base rows goes through the
-        __deletes table. Both tables commit from the same accepted-rows
-        DataFrame in this method, deletes only ever append tombstones,
-        and compaction re-groups without dropping docs — so the per-term
-        postings df equals the unfiltered candidate count and search()
-        falls back to count-agg whenever filters or deletes apply. A
-        future write path that prunes base rows or drops postings WITHOUT
-        touching __deletes would silently skew df, score and the
-        pagination clamp (regression-pinned by
-        tests/test_postings_search.py::test_df_source_modes_identical).
+        INVARIANT (multi-term OR search depends on it): every doc_id
+        referenced by a postings row exists in the base table, and any
+        path that removes/hides base rows goes through the __deletes
+        table. Both tables commit from the same accepted-rows DataFrame
+        in this method, deletes only ever append tombstones, and
+        compaction re-groups without dropping docs. multi_term_or scores
+        each term with df = its posting-list length, so a write path
+        that pruned base rows or dropped postings WITHOUT touching
+        __deletes would silently skew those scores.
+
+        The two localCheckpoints below live in this call's own
+        pins.scope(), released once the three writes are done.
         """
         for f in self.fields:
             if f not in raw.columns and f != AUTO_PK:
@@ -287,9 +289,9 @@ class Table:
                 for f, t in self.fields.items()
             ]
         )
-        ranged = (
-            typed.withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint()  # pin partition assignment across passes
+        # pin partition assignment across passes
+        ranged = pin(
+            typed.withColumn("_pid", F.spark_partition_id()), snapshot=True
         )
         counts = {
             r["_pid"]: r["cnt"]
@@ -308,7 +310,7 @@ class Table:
             *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
         )
         w = Window.partitionBy("_pid").orderBy(self.pk)
-        batch = (
+        batch = pin(  # reused 4x below
             ranged.withColumn(
                 "doc_id",
                 (
@@ -317,9 +319,9 @@ class Table:
                     + off_map[F.col("_pid")]
                     + F.lit(self.next_doc_id)
                 ),
-            )
-            .drop("_pid")
-            .localCheckpoint(eager=False)  # reused 4x below
+            ).drop("_pid"),
+            snapshot=True,
+            eager=False,
         )
 
         # burned rows: numeric/time sentinel from an unparseable input
@@ -408,7 +410,6 @@ class Table:
         offset: int = 0,
         size: int = 0,
         keep_total: bool = False,
-        df_source: str = "postings",
         mode: str = "or",
     ) -> DataFrame:
         """Single-term search (keyword: str, reference-exact), or
@@ -457,10 +458,6 @@ class Table:
             numeric_fields=numeric,
             term_buckets=self.term_buckets,
             keep_total=keep_total,
-            # df comes from the postings statistic when no filters/
-            # deletes shrink the candidate set (search_op falls back to
-            # the reference's count-agg semantics otherwise)
-            df_source=df_source,
         )
 
     # -- S6 schema evolution ------------------------------------------------

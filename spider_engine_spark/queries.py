@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from spider_engine_spark.operators.postings import build_postings_native
 from spider_engine_spark.operators.search import SearchFilter, search
+from spider_engine_spark.pins import pin
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -147,10 +148,6 @@ def _search_docs(spark, sf_dir, keyword, filters=(), offset=0, size=100):
         offset=offset,
         size=size,
         max_doc=docs.count(),
-        # df from the postings statistic when no filters shrink the set
-        # (search() falls back to the count-agg otherwise) — one fewer
-        # evaluation of the candidate subplan
-        df_source="postings",
     )
     return page.select("doc_id", "text", "lang", "source", "n_chars", "score")
 
@@ -1038,7 +1035,7 @@ def streaming_neardup_pairs(spark, sf_dir):
         # pin the (tiny) pair set, then delete the temp state so
         # repeated driver runs don't accumulate dirs under /tmp —
         # finally: a mid-loop Spark failure must not leak the root
-        pairs = io.read(spark, "pairs").localCheckpoint()
+        pairs = pin(io.read(spark, "pairs"), snapshot=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return jaccard_verify(pairs, docs, "doc_id", "text", n=3).filter(
@@ -1129,9 +1126,12 @@ def frontier_crawl(spark, sf_dir):
     docs = job.io.read(spark, "docs")
     # pin the (small) fetch sets, then delete the temp crawl state so
     # repeated driver runs don't accumulate dirs under /tmp
-    out = docs.select(
-        F.col("doc_id").alias("url"), F.col("fetch_step").alias("step")
-    ).orderBy("step", "url").localCheckpoint()
+    out = pin(
+        docs.select(
+            F.col("doc_id").alias("url"), F.col("fetch_step").alias("step")
+        ).orderBy("step", "url"),
+        snapshot=True,
+    )
     shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -3331,7 +3331,7 @@ def cms_term_counts(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     # toks feeds BOTH the sketch build and the true top-20 — persist so
     # the corpus is tokenized once (evictable cache, lineage retained)
-    toks = exploded_tokens(docs, "doc_id", "text").persist()
+    toks = pin(exploded_tokens(docs, "doc_id", "text"))
     counters = cms_counters(toks, "term", width=256, depth=4)
     top = (
         toks.groupBy("term")
@@ -3376,7 +3376,7 @@ def streaming_cms_term_counts(spark, sf_dir):
             handler(
                 toks.filter(F.pmod(F.col("doc_id"), F.lit(4)) == i), i
             )
-        counters = io.read(spark, "cms").localCheckpoint()
+        counters = pin(io.read(spark, "cms"), snapshot=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     top = (
@@ -3622,7 +3622,7 @@ _GATE_ROTATION = [
         "multimodal_decode",
     ],
 ]
-_GATE_ROUND = 6  # bump each round — picks the rotation slot
+_GATE_ROUND = 7  # bump each round — picks the rotation slot
 _GATE_OVERFLOW = _GATE_ROTATION[_GATE_ROUND % len(_GATE_ROTATION)]
 
 

@@ -54,6 +54,7 @@ from spider_engine_spark.operators.dedup import (
     bucket_self_pairs,
     minhash_signatures,
 )
+from spider_engine_spark.pins import pin, scope
 from spider_engine_spark.sources.tableio import TableIO
 
 
@@ -108,9 +109,9 @@ def make_neardup_batch_handler(
             )
         sigs = minhash_signatures(batch_df, key, content, k=k)
         # reused by the in-batch self-join, the cross-batch probe and
-        # the state append — persist (cache manager), not localCheckpoint
-        bb = band_buckets(sigs, key, bands).persist()
-        try:
+        # the state append — cached (not a snapshot) for this batch only
+        with scope():
+            bb = pin(band_buckets(sigs, key, bands))
             if batch_id > done("pairs"):
                 pairs = bucket_self_pairs(bb, key)
                 if prior is not None:
@@ -144,8 +145,6 @@ def make_neardup_batch_handler(
                 io.write(
                     "buckets", bb, mode="append", meta={"batch_id": batch_id}
                 )
-        finally:
-            bb.unpersist()
         # incremental compaction (the shared ingest.py boundary law,
         # incl. the stale-replay meta guard): without it a long-running
         # stream's probe unions one parquet dir per historical batch —

@@ -49,6 +49,7 @@ from pyspark.sql.types import (
 )
 
 from spider_engine_spark.operators.seenset import shard_expr
+from spider_engine_spark.pins import pin, scope
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -150,13 +151,14 @@ def make_seen_batch_handler(io):
     seen table (shard-pruned read, like the batch frontier); admitted
     rows append to it. Idempotent per batch_id across checkpoint replays."""
 
+    @scope()
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if io.exists("seen") and int(
             io.meta("seen").get("batch_id", -1)
         ) >= batch_id:
             return
         spark = batch_df.sparkSession
-        batch_df = batch_df.cache()
+        batch_df = pin(batch_df)
         fresh = batch_df.filter(~F.col("maybe_seen"))
         maybe = batch_df.filter(F.col("maybe_seen"))
         if io.exists("seen"):
@@ -196,7 +198,6 @@ def make_seen_batch_handler(io):
             meta={"batch_id": batch_id},
             partition_by=["shard"],
         )
-        batch_df.unpersist()
 
     return handle
 

@@ -384,27 +384,6 @@ def test_instant_timestamp_filter_tz_independent(spark):
     assert got["UTC"] == got["Asia/Shanghai"] == 1704067200
 
 
-def test_df_source_modes_identical(cat):
-    """Round-3 advice: Table.search defaults to df_source='postings'
-    (index-statistic df); its correctness rests on the postings-⊆-base
-    invariant documented at add_docs_df. Pin that count-mode and
-    postings-mode produce identical scores and _total on an unfiltered
-    search — if a future write path breaks the invariant, this fails."""
-    t = cat.create_table("db1", "dfsrc", FIELDS)
-    t.add_docs(ROWS)
-
-    def page(df_source):
-        return sorted(
-            (r["user_id"], r["score"], r["_total"])
-            for r in t.search(
-                "美食", field="user_desc", keep_total=True,
-                df_source=df_source,
-            ).collect()
-        )
-
-    assert page("postings") == page("count")
-
-
 def test_multi_term_table_search(cat):
     """Round-3 advice #6: Table.search accepts a term LIST routed to the
     scored-OR / AND operators with filters + pagination applied."""

@@ -204,6 +204,26 @@ def test_filter_value_dispatch_by_field_type(api):
     assert api("DELETE", "/db2")["code"] == 0
 
 
+def test_search_for_absent_term_is_empty(api):
+    """A single-term search for a term no stored row holds has df = 0:
+    an empty page with total 0, not a division by zero."""
+    assert api("POST", "/adb")["code"] == 0
+    fields = [
+        {"name": "k", "type": "primary"},
+        {"name": "body", "type": "words"},
+    ]
+    assert api("POST", "/adb/t", fields)["code"] == 0
+    assert api("POST", "/adb/t/1", {"body": "alpha beta"})["code"] == 0
+    r = api(
+        "POST",
+        "/_search",
+        {"database": "adb", "table": "t", "fieldName": "body", "value": "zeta"},
+    )
+    assert r["code"] == 0, r
+    assert r["data"] == {"docs": [], "total": 0}
+    assert api("DELETE", "/adb")["code"] == 0
+
+
 def test_multi_term_search_via_rest(api):
     """Round-3 advice #6: the reference's request model declared a query
     LIST (search/search.go:263-320) but only single-term search shipped;

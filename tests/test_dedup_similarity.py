@@ -265,6 +265,32 @@ def test_kmeans_improves_ivf_partition(spark):
     assert len(got & brute) >= 6  # decent recall at half the lists probed
 
 
+
+def test_kmeans_null_elements_move_no_centroid(spark):
+    """A vector with a NULL element has no cosine to any centroid
+    (ivf_assign puts it in list -1), so it moves no centroid — here one
+    such vector, next to one whose dimension 0 is NULL like every other
+    list -1 vector's: no division by 0 or None, and the fit equals the
+    fit without them."""
+    from spider_engine_spark.operators.similarity import kmeans_centroids
+
+    clean = [
+        (0, [1.0, 0.0, 0.5]),
+        (1, [0.0, 1.0, 0.5]),
+        (2, [0.9, 0.2, 0.4]),
+        (3, [0.1, 0.8, 0.6]),
+    ]
+    dirty = clean + [(4, [None, 3.0, 1.0]), (5, [None, None, 2.0])]
+    schema = "vec_id long, embedding array<float>"
+
+    def fit(rows):
+        df = spark.createDataFrame(rows, schema)
+        return kmeans_centroids(df, "vec_id", "embedding", 2, iters=3)
+
+    got = fit(dirty)
+    assert got == fit(clean)
+    assert all(x is not None for c in got for x in c)
+
 def test_hot_shingle_cap_keeps_exact_dup_clusters(spark):
     """A duplicate cluster LARGER than max_df must keep all its pairs:
     every shingle in the cluster is hotter than the cap, but the exact
@@ -682,22 +708,29 @@ def test_connected_components_frees_intermediate_checkpoints(spark):
     checkpoint and the edge list must be freed (localCheckpoint blocks
     are invisible to Dataset.unpersist — the operator frees them by RDD
     id), else a long session leaks one snapshot per round."""
-    from spider_engine_spark.operators.dedup import (
-        _pinned_rdd_ids,
-        connected_components,
-    )
+    from spider_engine_spark.operators.dedup import connected_components
+    from spider_engine_spark.pins import scope
+
+    def pinned_rdd_ids() -> set[int]:
+        return {
+            r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
 
     pairs = spark.createDataFrame(
         [(f"d{i}", f"d{i+1}") for i in range(9)], "a string, b string"
     )
-    before = _pinned_rdd_ids(spark)
-    out = connected_components(pairs)
-    assert out.count() == 10
-    leaked = _pinned_rdd_ids(spark) - before
-    assert len(leaked) == 1, (
-        f"{len(leaked)} snapshots pinned after the run — expected only "
-        "the returned labels"
-    )
+    before = pinned_rdd_ids()
+    with scope() as held:
+        out = connected_components(pairs)
+        assert out.count() == 10
+        leaked = pinned_rdd_ids() - before
+        assert len(leaked) == 1, (
+            f"{len(leaked)} snapshots pinned after the run — expected only "
+            "the returned labels"
+        )
+        assert held == [out]
+    # the caller's scope frees the returned labels too
+    assert not (pinned_rdd_ids() - before)
 
 
 # ---------------------------------------------------------------------------
@@ -1233,20 +1266,21 @@ def test_semantic_dedup_plan_shapes(spark):
         "/root/testdata/sf0.001/embeddings.parquet"
     ).selectExpr("vec_id", "embedding")
     cents = [[float(i == j) for j in range(64)] for i in range(4)]
-    pairs = semantic_dedup_pairs(
-        emb, "vec_id", "embedding", cents, threshold=0.95, max_cluster=100
-    )
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    try:
+    from spider_engine_spark.pins import scope
+
+    with scope() as held:
+        pairs = semantic_dedup_pairs(
+            emb, "vec_id", "embedding", cents, threshold=0.95, max_cluster=100
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        # the attached handle must be the frame that actually holds the
-        # cache (under max_cluster the join+filter rebind used to leak)
-        assert pairs._spider_assigned.storageLevel.useMemory
-    finally:
-        pairs._spider_assigned.unpersist()
-        assert not pairs._spider_assigned.storageLevel.useMemory
+        # the scope holds the frame that actually holds the cache (under
+        # max_cluster the join+filter rebind used to leak)
+        (assigned,) = held
+        assert assigned.storageLevel.useMemory
+    assert not assigned.storageLevel.useMemory
 
 
 def test_paragraph_dedup_first_occurrence_law(spark):

@@ -98,22 +98,29 @@ def test_window_ntile_users_has_no_global_window(spark):
     assert got == expect
 
 
+def _pinned_rdd_ids(spark) -> set[int]:
+    """Ids of RDDs currently holding blocks in the block manager."""
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def test_global_ranks_release_and_reliable_modes(spark, tmp_path):
-    """The pinned localCheckpoint behind a ranks result is released by
-    release_global_ranks (handle rides the frame); reliable mode pins
+    """The one localCheckpoint behind a ranks result is pinned in the
+    caller's scope and released when it exits; reliable mode pins
     nothing in the block manager."""
-    from spider_engine_spark.operators.dedup import _pinned_rdd_ids
-    from spider_engine_spark.operators.ranking import release_global_ranks
+    from spider_engine_spark.pins import scope
 
     df = _mkdf(spark, 200)
     order = [F.desc("total"), F.asc("user_id")]
     before = _pinned_rdd_ids(spark)
-    out = distributed_ntile(df, 4, order, out="q")
-    assert out.count() == 200
-    pinned = _pinned_rdd_ids(spark) - before
-    assert len(pinned) == 1
-    assert getattr(out, "_spider_pinned_rdd_id") in pinned
-    release_global_ranks(out)
+    with scope() as held:
+        out = distributed_ntile(df, 4, order, out="q")
+        assert out.count() == 200
+        pinned = _pinned_rdd_ids(spark) - before
+        assert len(pinned) == 1
+        # the input cache is already released: the scope holds only the
+        # snapshot the result reads
+        (snap,) = held
+        assert snap._jdf.queryExecution().analyzed().rdd().id() in pinned
     assert not (_pinned_rdd_ids(spark) - before)
     # reliable mode: nothing block-pinned, results identical
     before = _pinned_rdd_ids(spark)
@@ -122,5 +129,9 @@ def test_global_ranks_release_and_reliable_modes(spark, tmp_path):
     )
     got = {r.user_id: r.q for r in out2.collect()}
     assert not (_pinned_rdd_ids(spark) - before)
-    expect = {r.user_id: r.q for r in distributed_ntile(df, 4, order, out="q").collect()}
+    with scope():
+        expect = {
+            r.user_id: r.q
+            for r in distributed_ntile(df, 4, order, out="q").collect()
+        }
     assert got == expect
