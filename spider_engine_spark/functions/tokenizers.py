@@ -20,9 +20,9 @@ The TF weight law itself is ported exactly (numpy float32 arithmetic).
 
 Exposed in three forms:
 1. pure-Python functions (pytest oracles, the replay simulator),
-2. `tokenize_udf(mode)` — a vectorized pandas UDF returning
-   array<struct<term string, weight int>> (Arrow transport, no per-row
-   Python at the Spark API surface),
+2. `tokenize_cols_udf(mode)` — a vectorized pandas UDF returning
+   struct<terms array<string>, weights array<int>> (Arrow transport, no
+   per-row Python at the Spark API surface),
 3. a pure-JVM fast path for whitespace corpora lives in
    operators/postings.py (build_postings_native) — no Python at all.
 """
@@ -52,16 +52,6 @@ PUNCTUATION = frozenset(
 )
 
 BIGGER_MULTIPLE = 10000  # common.go:78
-
-TOKENS_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("term", StringType(), False),
-            StructField("weight", IntegerType(), False),
-        ]
-    )
-)
-
 
 def tf_weight(term_cnt: int, total_cnt: int) -> int:
     """uint32(float32(termCnt)/float32(totalCnt) * 10000) — common.go:149.
@@ -262,22 +252,3 @@ def tokenize_cols_udf(mode: str):
 
     return _tok
 
-
-def tokenize_udf(mode: str):
-    """Vectorized pandas UDF: string column -> array<struct<term,weight>>.
-
-    Arrow-batched; the per-string tokenize is inherently scalar work but the
-    JVM<->Python transport is columnar (input_hint mandate: no per-row
-    Python at the DataFrame API surface).
-    """
-    fn = SPLITTERS[mode]
-
-    @pandas_udf(TOKENS_SCHEMA)
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda x: []
-            if x is None
-            else [{"term": t, "weight": w} for t, w in fn(x)]
-        )
-
-    return _tok

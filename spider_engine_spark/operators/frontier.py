@@ -35,6 +35,8 @@ fully-committed frontier).
 from __future__ import annotations
 
 import time
+from dataclasses import dataclass
+from functools import reduce
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -370,20 +372,56 @@ def index_docs(docs: DataFrame) -> DataFrame:
     return aggregate_postings(toks, doc_buckets=n_buckets)
 
 
+@dataclass
+class _Staged:
+    """A table's puts since the last flush (checkpoint_every > 1)."""
+
+    frames: list[DataFrame]
+    append: bool
+    meta: dict
+    partition_by: list[str] | None
+
+
+# table -> (max_bytes, transform) of its compact_every fold; unlisted
+# tables are never folded.
+# - filter folds ALL dirs (max_bytes=inf), not just undersized ones: its
+#   garbage is defined by SUPERSESSION (older rows for a re-dirtied
+#   shard), not by dir size — at the 10^10-URL sizing most shards are
+#   dirty every step, so a size criterion would never fold them. Cost:
+#   one full-state write every compact_every steps, and the
+#   latest-per-shard read fans over <= compact_every dirs.
+# - seen, hosts and postings fold only the undersized snapshots
+#   (read-amplification control; large already-compacted dirs are reused
+#   untouched — the reference's pick-undersized-groups planner,
+#   table.go:874-971). Admitted sets are disjoint by construction, so a
+#   concat merge keeps seen distinct; hosts appends one tiny snapshot per
+#   step that a broadcast join reads every step.
+_COMPACTION = {
+    "filter": (1 << 60, seenset.latest_state),
+    "seen": (64 << 20, None),
+    "hosts": (64 << 20, None),
+    "postings": (64 << 20, merge_postings),
+}
+
+
 class CrawlJob:
     """Distributed frontier crawl with a configurable checkpoint interval.
 
-    checkpoint_every=1 (default): every superstep commits every state
-    table as a TableIO snapshot — maximum durability, one parquet commit
-    per table per step (the reference's flush-per-threshold analogue,
-    table.go:503-508).
+    Both intervals run one superstep body; the interval only decides where
+    the step's state changes go, inside the state layer (_put, _get,
+    flush):
 
-    checkpoint_every=N>1: state lives as cached DataFrames between
-    snapshots and is committed every N supersteps (and on flush()). This
-    is the standard iterative-Spark design (Pregel-style): at 1000
-    executors you don't pay a distributed-FS commit per superstep; a
-    crash replays at most N-1 steps from the last snapshot. Results are
-    bit-identical in both modes (the replay tests run both).
+    checkpoint_every=1 (default): each put commits a TableIO snapshot at
+    once — maximum durability, one parquet commit per table per step (the
+    reference's flush-per-threshold analogue, table.go:503-508).
+
+    checkpoint_every=N>1: each put is materialized as a local checkpoint
+    and staged; every N supersteps (and on flush()) the staged tables
+    commit as the same snapshots, frontier last. This is the standard
+    iterative-Spark design (Pregel-style): at 1000 executors you don't pay
+    a distributed-FS commit per superstep; a crash replays at most N-1
+    steps from the last commit. Results are bit-identical in both modes
+    (the replay tests run both).
     """
 
     def __init__(
@@ -407,10 +445,7 @@ class CrawlJob:
         self.io = TableIO(root)
         self.salts = salts
         self.index = index
-        self._mem: dict[str, DataFrame] = {}
-        self._postings_pieces: list[DataFrame] = []
-        self._retired: list[list[DataFrame]] = []
-        self._frontier_meta: dict = {}
+        self._mem: dict[str, _Staged] = {}
         if self.io.exists("frontier"):
             meta = self.io.meta("frontier")
             self.step_no = int(meta.get("step", 0))
@@ -663,7 +698,7 @@ class CrawlJob:
         at both the committed step AND the committed epoch."""
         step = self.step_no
         epoch = self.layout_epoch
-        for tbl in ("docs", "seen", "filter", "postings", "admitted", "hosts"):
+        for tbl in ("docs", "seen", "filter", "postings", "hosts"):
             if self.io.exists(tbl):
                 m = self.io.meta(tbl)
                 if (
@@ -682,20 +717,26 @@ class CrawlJob:
                         self.io.drop(tbl)
 
     # -- state layer ---------------------------------------------------
+    # The only place the two checkpoint modes differ: run_step hands every
+    # state change to _put and reads state back through _get.
     def _get(self, name: str) -> DataFrame:
-        if name in self._mem:
-            return self._mem[name]
-        return self.io.read(self.spark, name)
+        """A table's current rows: the committed snapshot plus what is
+        staged on top of it (staged appends union onto it; a staged
+        overwrite replaces it)."""
+        staged = self._mem.get(name)
+        frames = list(staged.frames) if staged else []
+        if (staged is None or staged.append) and self.io.exists(name):
+            frames.insert(0, self.io.read(self.spark, name))
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
 
     def _filter_state(self) -> DataFrame:
         """Current cuckoo state, one row per shard (STATE_SCHEMA).
 
-        Memory mode holds the resolved state directly; the durable table
-        is append-only dirty-shard rows tagged with `step`, resolved
-        latest-per-shard here."""
-        if "filter" in self._mem:
-            return self._mem["filter"]
-        df = self.io.read(self.spark, "filter")
+        The filter table is append-only dirty-shard rows tagged with
+        `step`, resolved latest-per-shard here."""
+        df = self._get("filter")
         if "step" in df.columns:
             df = seenset.latest_state(df).drop("step")
         return df
@@ -704,80 +745,81 @@ class CrawlJob:
         self,
         name: str,
         df: DataFrame,
+        meta: dict,
+        partition_by: list[str] | None = None,
         append: bool = False,
-        checkpoint: bool = True,
     ) -> DataFrame:
-        """Stage new state. Durable mode writes through immediately;
-        memory mode caches (union-appending onto the previous state).
+        """Make `df` the table's new state, or append it. Returns the rows
+        put, read from where they now live, so `df` is computed once.
 
-        checkpoint=False keeps a plain lazy plan — used for state that is
-        only consumed at flush time (postings): its parents (docs) are
-        already checkpointed, so lineage grows linearly, and skipping
-        localCheckpoint avoids materializing the heavy tokenize stage
-        inside the superstep."""
+        checkpoint_every=1 commits a TableIO snapshot now. Otherwise `df`
+        is materialized as a local checkpoint (which cuts its lineage, as
+        a snapshot does) and staged with its meta and hive layout until
+        flush() commits it."""
         if self.checkpoint_every == 1:
-            self.io.write(name, df, mode="append" if append else "overwrite")
-            return self.io.read(self.spark, name)
-        if append:
-            if name in self._mem:
-                df = self._mem[name].unionByName(df)
-            elif self.io.exists(name):
-                df = self.io.read(self.spark, name).unionByName(df)
-        old = self._mem.get(name)
-        if checkpoint:
-            # localCheckpoint truncates the logical plan (lineage would
-            # grow multiplicatively across supersteps and blow up the
-            # optimizer); lazy so the first consumer materializes it
-            df = pin(df, snapshot=True, eager=False)
-        self._mem[name] = df
-        cached = df
-        if old is not None:
-            self._retired_current.append(old)
-        return cached
+            self._write(name, df, append, meta, partition_by)
+            return self.io.read_added(self.spark, name)
+        df = pin(df, snapshot=True)
+        staged = self._mem.get(name)
+        if staged is None or not append:
+            for old in staged.frames if staged else []:
+                release(old)
+            staged = self._mem[name] = _Staged([], append, meta, partition_by)
+        staged.frames.append(df)
+        staged.meta = meta
+        return df
 
-    def _checkpoint(self) -> None:
-        """Commit all in-memory state as TableIO snapshots.
-
-        The frontier snapshot (the step-counter commit point) is written
-        LAST, mirroring the durable path's frontier-last invariant: a
-        crash mid-checkpoint leaves the frontier at the previous step and
-        run_step's orphan-revert pass rolls the other tables back to it —
-        never a frontier ahead of the seen state."""
-        names = sorted(self._mem, key=lambda n: n == "frontier")
-        for name in names:
-            meta = self._frontier_meta if name == "frontier" else {
-                "step": self.step_no
-            }
-            if name in ("seen", "filter"):
-                meta = {**meta, "layout_epoch": self.layout_epoch}
-            part = {"seen": ["shard"], "docs": ["fetch_step"]}.get(name)
-            df = self._mem[name]
-            if name == "filter":
-                # durable filter rows carry the step tag (read resolver)
-                df = df.withColumn("step", F.lit(self.step_no))
-            self.io.write(
-                name, df, mode="overwrite", meta=meta,
-                partition_by=part,
+    def _write(
+        self,
+        name: str,
+        df: DataFrame,
+        append: bool,
+        meta: dict,
+        partition_by: list[str] | None,
+    ) -> None:
+        """Commit one table snapshot. Every compact_every-th step also
+        folds the table's append chain (see _COMPACTION)."""
+        self.io.write(
+            name, df, mode="append" if append else "overwrite", meta=meta,
+            partition_by=partition_by,
+        )
+        fold = _COMPACTION.get(name)
+        if fold and meta["step"] % self.compact_every == 0:
+            max_bytes, transform = fold
+            self.io.compact_small(
+                self.spark, name, max_bytes=max_bytes, meta=meta,
+                transform=transform,
             )
-        # re-point memory at the durable snapshots so lineage is cut.
-        # Nothing reads the in-memory state or the frames retired since
-        # the last checkpoint any more: release them all. (Between
-        # checkpoints a retired frame may still feed a lazy snapshot,
-        # such as the docs union, that only this commit materializes.)
-        for df in [*self._mem.values(), *self._postings_pieces]:
-            release(df)
-        self._release_retired(keep=0)
-        self._mem.clear()
-        self._postings_pieces.clear()
-
-    def _release_retired(self, keep: int) -> None:
-        while len(self._retired) > keep:
-            for df in self._retired.pop(0):
-                release(df)
 
     def flush(self) -> None:
-        if self.checkpoint_every != 1:
-            self._checkpoint()
+        """Commit the staged tables (checkpoint_every=1 stages none).
+
+        The frontier (the step-counter commit point) is written LAST: a
+        crash mid-flush leaves the frontier at the previous commit and
+        run_step's orphan-revert pass rolls the other tables back to it
+        — never a frontier ahead of the seen state."""
+        for name in sorted(self._mem, key=lambda n: n == "frontier"):
+            staged = self._mem[name]
+            self._write(
+                name, reduce(DataFrame.unionByName, staged.frames),
+                staged.append, staged.meta, staged.partition_by,
+            )
+        for staged in self._mem.values():
+            for df in staged.frames:
+                release(df)
+        self._mem.clear()
+
+    def _end_step(self) -> None:
+        self.step_no += 1
+        if self.step_no % self.checkpoint_every == 0:
+            self.flush()
+
+    def _frontier_meta(self, metrics: dict) -> dict:
+        return {
+            "step": self.step_no + 1,
+            "metrics": dict(metrics),
+            **self._layout_meta(),
+        }
 
     def _migrate_attr_law(self, frontier_meta: dict) -> None:
         """Re-derive persisted priority/budget after an attribute-law
@@ -858,7 +900,6 @@ class CrawlJob:
     def run_step(self) -> dict:
         t0 = time.monotonic()
         phases: dict[str, float] = {}
-        self._retired_current: list[DataFrame] = []
 
         def mark(name, _last=[t0]):
             now = time.monotonic()
@@ -876,40 +917,21 @@ class CrawlJob:
         mark("select_batch")
         if n_batch == 0:
             metrics = {"step": step + 1, "fetched": 0, "done": True}
-            self._frontier_meta = {
-                "step": step + 1,
-                "metrics": metrics,
-                **self._layout_meta(),
-            }
-            if self.checkpoint_every == 1:
-                self.io.write("frontier", frontier, meta=self._frontier_meta)
-            self.step_no += 1
+            self._put("frontier", frontier, self._frontier_meta(metrics))
+            self._end_step()
             release(batch)
             return metrics
 
-        # fetch: make_doc runs exactly once — durable mode commits the
-        # snapshot then re-reads the parquet; memory mode caches
-        if self.checkpoint_every == 1:
-            # hive-partitioned by fetch_step: the per-superstep read below
-            # (and any step-sliced replay read) prunes to ONE partition
-            # dir instead of filtering a scan of the whole append chain —
-            # same mechanism as `seen`'s shard pruning. Without it the
-            # file listing + footer reads grow O(steps).
-            self.io.write(
-                "docs", fetch_docs(batch, step, self.cfg), mode="append",
-                meta={"step": step + 1}, partition_by=["fetch_step"],
-            )
-            docs = self.io.read(spark, "docs").filter(
-                F.col("fetch_step") == step
-            )
-        else:
-            docs = pin(
-                fetch_docs(batch, step, self.cfg), snapshot=True, eager=False
-            )
-            self._put("docs", docs, append=True)
-            self._retired_current.append(docs)
+        # fetch: make_doc runs exactly once; the step reads its docs back
+        # from _put. Hive-partitioned by fetch_step, so any step-sliced
+        # replay read prunes to ONE partition dir instead of filtering a
+        # scan of the whole append chain — same mechanism as `seen`'s
+        # shard pruning.
+        docs = self._put(
+            "docs", fetch_docs(batch, step, self.cfg), {"step": step + 1},
+            partition_by=["fetch_step"], append=True,
+        )
         mark("fetch_write")
-
         # outlink extraction: media spans carry the links;
         # child depth = parent depth + 1 via doc_id == parent url
         parent_depth = batch.select(
@@ -990,12 +1012,7 @@ class CrawlJob:
                     .select("host", "priority", "budget")
                     .distinct()
                 )
-            if self.checkpoint_every == 1:
-                self.io.write(
-                    "hosts", new_hosts, mode="append", meta={"step": step + 1}
-                )
-            else:
-                self._put("hosts", new_hosts, append=True)
+            self._put("hosts", new_hosts, {"step": step + 1}, append=True)
         mark("enrich")
         n_links = sum(allow_counts.values())
         n_robots_blocked = allow_counts.get(False, 0)
@@ -1015,7 +1032,6 @@ class CrawlJob:
             snapshot=True,
             eager=False,
         )
-        self._retired_current.append(cand)
 
         state = self._filter_state()
         # minimal-traffic probe: only (shard, hash) crosses into Python;
@@ -1026,86 +1042,47 @@ class CrawlJob:
             snapshot=True,
             eager=False,
         )
-        self._retired_current.append(maybe_hashes)
         definitely_new = cand.join(
             maybe_hashes, ["shard", "hash"], "left_anti"
         )
         maybe = cand.join(maybe_hashes, ["shard", "hash"], "left_semi")
-        if self.checkpoint_every == 1:
-            # durable mode: the seen table is hive-partitioned by shard
-            # at rest, so a LITERAL isin over the shards the maybe-set
-            # touches prunes the scan to those partition dirs — worth
-            # the two driver actions (count + touched collect); the
-            # probe never reads the whole 10^10-row seen set.
-            n_maybe = maybe_hashes.count()
-            mark("probe")
-            if n_maybe:
-                touched = [
-                    r["shard"]
-                    for r in maybe_hashes.select("shard").distinct().collect()
-                ]
-                seen_probe = (
-                    self._get("seen")
-                    .filter(F.col("shard").isin(touched))
-                    .select("shard", "url")
-                )
-                truly_new = maybe.join(
-                    seen_probe, ["shard", "url"], "left_anti"
-                )
-            else:
-                truly_new = maybe  # empty by construction
-        else:
-            # memory mode: the seen state is a cached union — there are
-            # no partition dirs to prune, so a broadcast semi-join on
-            # the maybe-set's shards does the same pruning lazily and
-            # the two probe-side driver actions disappear (n_maybe is
-            # counted in the combined metrics action below; an empty
-            # maybe-set makes both joins no-ops without knowing its
-            # count up front).
-            n_maybe = None
-            mark("probe")
+        # the seen table is hive-partitioned by shard at rest, so a
+        # LITERAL isin over the shards the maybe-set touches prunes the
+        # scan to those partition dirs — worth the two driver actions
+        # (count + touched collect); the probe never reads the whole
+        # 10^10-row seen set.
+        n_maybe = maybe_hashes.count()
+        mark("probe")
+        truly_new = maybe  # empty when n_maybe == 0
+        if n_maybe:
+            touched = [
+                r["shard"]
+                for r in maybe_hashes.select("shard").distinct().collect()
+            ]
             seen_probe = (
                 self._get("seen")
-                .join(
-                    F.broadcast(maybe_hashes.select("shard").distinct()),
-                    "shard",
-                    "left_semi",
-                )
+                .filter(F.col("shard").isin(touched))
                 .select("shard", "url")
             )
-            truly_new = maybe.join(
-                seen_probe, ["shard", "url"], "left_anti"
-            )
-        admitted = definitely_new.unionByName(truly_new).withColumn(
-            "discovered_step", F.lit(step + 1)
+            truly_new = maybe.join(seen_probe, ["shard", "url"], "left_anti")
+        # admitted feeds lineage, frontier, seen and filter: the lineage
+        # action below materializes it once
+        admitted = pin(
+            definitely_new.unionByName(truly_new).withColumn(
+                "discovered_step", F.lit(step + 1)
+            ),
+            snapshot=True,
+            eager=False,
         )
-        # admitted is reused 4x (lineage, frontier, seen, filter): durable
-        # mode parks it in parquet, memory mode caches it
-        if self.checkpoint_every == 1:
-            self.io.write("admitted", admitted, meta={"step": step + 1})
-            admitted = self.io.read(spark, "admitted")
-        else:
-            admitted = pin(admitted, snapshot=True, eager=False)
-            self._retired_current.append(admitted)
         mark("admit_write")
 
-        # per-partition lineage metrics (north_rule) — also yields totals.
-        # Memory mode folds the maybe-set count into the SAME action (a
-        # sentinel row unioned onto the per-shard counts) instead of the
-        # separate maybe_hashes.count() the durable path pays.
-        _lineage = admitted.groupBy(
-            F.col("shard").cast("string").alias("k")
-        ).agg(F.count("*").alias("cnt"))
-        if n_maybe is None:
-            _lineage = _lineage.unionByName(
-                maybe_hashes.select(F.lit("__maybe__").alias("k")).groupBy(
-                    "k"
-                ).agg(F.count("*").alias("cnt"))
-            )
-        _rows = {r["k"]: r["cnt"] for r in _lineage.collect()}
-        if n_maybe is None:
-            n_maybe = _rows.pop("__maybe__", 0)
-        shard_counts = _rows
+        # per-partition lineage metrics (north_rule) — also yields totals
+        shard_counts = {
+            r["k"]: r["cnt"]
+            for r in admitted.groupBy(F.col("shard").cast("string").alias("k"))
+            .agg(F.count("*").alias("cnt"))
+            .collect()
+        }
         n_admitted = sum(shard_counts.values())
         mark("lineage")
         # maybe-seen rows that were NOT exactly seen are the filter's
@@ -1124,144 +1101,62 @@ class CrawlJob:
             "admitted_per_shard": shard_counts,
             "duration_sec": None,  # filled below
         }
-        self._frontier_meta = {
-            "step": step + 1,
-            "metrics": metrics,
-            **self._layout_meta(),
-        }
 
-        # frontier' = frontier - batch + admitted
+        # layout-dependent tables carry the current layout_epoch in every
+        # version meta (truthful epoch bookkeeping for the migration
+        # crash-recovery scan)
+        lmeta = {"step": step + 1, "layout_epoch": self.layout_epoch}
+        # an all-duplicates superstep (every discovered URL already seen)
+        # legitimately admits ZERO rows — skip both appends: an empty
+        # hive-partitioned write commits a parquet-less dir, and with
+        # nothing admitted there are no dirty filter shards either.
+        # Recovery is unaffected: the commit point is the frontier, and a
+        # seen/filter meta step older than the committed step just means
+        # those steps added nothing.
+        if n_admitted > 0:
+            self._put(
+                "seen", admitted.select("url", "hash", "shard"), lmeta,
+                partition_by=["shard"], append=True,
+            )
+            mark("seen_write")
+            # append ONLY dirty shards (those that admitted rows), tagged
+            # with the step and resolved latest-per-shard at read time
+            # (_filter_state). A full-state rewrite would round-trip every
+            # shard's bytes through Arrow and onto disk each superstep
+            # (~32 GiB at the 10^10-URL sizing) even when one shard changed.
+            dirty = seenset.insert(
+                admitted, state, self.capacity, dirty_only=True
+            )
+            self._put(
+                "filter", dirty.withColumn("step", F.lit(step + 1)), lmeta,
+                append=True,
+            )
+        mark("filter_write")
+        if self.index:
+            # append this step's postings; the full merge is compaction's
+            # job, not per-step work (the read side re-merges lazily)
+            self._put(
+                "postings", index_docs(docs), {"step": step + 1}, append=True
+            )
+        mark("index")
+
+        # frontier' = frontier - batch + admitted. COMMIT POINT: the
+        # frontier (carrying the step counter) goes last; everything
+        # before it is revertible
         remaining = frontier.join(batch.select("url"), "url", "left_anti")
         new_frontier = remaining.unionByName(
             admitted.select(
                 "url", "host", "depth", "priority", "budget", "discovered_step"
             )
         ).repartition(self.num_shards, "host")
-
-        if self.checkpoint_every == 1:
-            # layout-dependent tables carry the current layout_epoch in
-            # every version meta (truthful epoch bookkeeping for the
-            # migration crash-recovery scan)
-            lmeta = {"step": step + 1, "layout_epoch": self.layout_epoch}
-            # an all-duplicates superstep (every discovered URL already
-            # seen) legitimately admits ZERO rows — skip both appends:
-            # an empty hive-partitioned write commits a parquet-less dir
-            # (the hazard ivf_append guards against; TableIO.read now
-            # also tolerates it), and with nothing admitted there are no
-            # dirty filter shards either. Recovery is unaffected: the
-            # commit point is the frontier snapshot, and a seen/filter
-            # meta step older than the committed step just means those
-            # steps added nothing.
-            if n_admitted > 0:
-                self.io.write(
-                    "seen", admitted.select("url", "hash", "shard"),
-                    mode="append", meta=lmeta,
-                    partition_by=["shard"],
-                )
-                mark("seen_write")
-                # write ONLY dirty shards (those that admitted rows):
-                # the filter table is append-only with a step tag,
-                # resolved latest-per-shard at read time
-                # (seenset.latest_state). The former full-state rewrite
-                # round-tripped every shard's bytes through Arrow and
-                # onto disk each superstep (~32 GiB at the 10^10-URL
-                # sizing) even when one shard changed.
-                dirty = seenset.insert(
-                    admitted, state, self.capacity, dirty_only=True
-                )
-                self.io.write(
-                    "filter",
-                    dirty.withColumn("step", F.lit(step + 1)),
-                    mode="append",
-                    meta=lmeta,
-                )
-            if (step + 1) % self.compact_every == 0:
-                # fold ALL filter dirs (max_bytes=∞), not just undersized
-                # ones: the filter's garbage is defined by SUPERSESSION
-                # (older rows for a re-dirtied shard), not by dir size —
-                # at the 10^10-URL sizing most shards are dirty every
-                # step, so per-step dirs are large and a size criterion
-                # would never fold them, growing the table O(steps).
-                # Cost: one full-state write every compact_every steps
-                # (amortized state/K per step — K× less write
-                # amplification than the old per-step full rewrite) and
-                # the latest-per-shard read fans over <= K dirs.
-                self.io.compact_small(
-                    spark, "filter", max_bytes=1 << 60,
-                    meta=lmeta,
-                    transform=seenset.latest_state,
-                )
-                # fold only the undersized seen snapshots (read-
-                # amplification control); admitted sets are disjoint by
-                # construction so a concat merge preserves distinctness,
-                # and large already-compacted dirs are reused untouched
-                # (the reference's pick-undersized-groups planner,
-                # table.go:874-971)
-                self.io.compact_small(
-                    spark, "seen", max_bytes=64 << 20,
-                    meta=lmeta, partition_by=["shard"],
-                )
-                if self.host_cache:
-                    # hosts appends one tiny snapshot per step — fold
-                    # them on the same cadence or the per-step
-                    # broadcast-join read fans over O(steps) dirs
-                    self.io.compact_small(
-                        spark, "hosts", max_bytes=64 << 20,
-                        meta={"step": step + 1},
-                    )
-            mark("filter_write")
-        else:
-            self._put("frontier", new_frontier)
-            self._put(
-                "seen", admitted.select("url", "hash", "shard"), append=True
-            )
-            self._put("filter", seenset.insert(admitted, state, self.capacity))
-            mark("state_update")
-        if self.index:
-            # append this step's postings; full merge is a periodic
-            # compaction, not per-step work (read side re-merges lazily)
-            if self.checkpoint_every == 1:
-                self.io.write(
-                    "postings", index_docs(docs), mode="append",
-                    meta={"step": step + 1},
-                )
-                if (step + 1) % self.compact_every == 0:
-                    # incremental: re-group only the undersized postings
-                    # snapshots; reads re-merge across dirs lazily anyway
-                    self.io.compact_small(
-                        spark, "postings", max_bytes=64 << 20,
-                        meta={"step": step + 1, "compacted": True},
-                        transform=merge_postings,
-                    )
-            else:
-                # materialize this step's postings NOW (cache+count): the
-                # tokenize graft is part of the superstep's work, and the
-                # cached per-step pieces keep the union lineage flat
-                step_postings = pin(index_docs(docs))
-                step_postings.count()
-                self._put(
-                    "postings", step_postings, append=True, checkpoint=False
-                )
-                self._postings_pieces.append(step_postings)
-        mark("index")
-        if self.checkpoint_every == 1:
-            # COMMIT POINT: the frontier snapshot (carrying the step
-            # counter) goes last; everything before it is revertible
-            self.io.write("frontier", new_frontier, meta=self._frontier_meta)
-            mark("frontier_write")
-        self.step_no += 1
-        self._retired.append(self._retired_current)
-        if self.checkpoint_every == 1:
-            # retire superseded state lazily (one step late, so any
-            # still-running lazy consumers read from cache, not recompute)
-            self._release_retired(keep=2)
-        elif self.step_no % self.checkpoint_every == 0:
-            self._checkpoint()
-            mark("checkpoint")
+        self._put("frontier", new_frontier, self._frontier_meta(metrics))
+        mark("frontier_write")
+        self._end_step()
+        mark("checkpoint")
         metrics["phases"] = phases
         metrics["duration_sec"] = time.monotonic() - t0
-        release(batch)
-        release(enriched)
+        for df in (batch, enriched, cand, maybe_hashes, admitted):
+            release(df)
         return metrics
 
     def run(self, n_steps: int) -> list[dict]:

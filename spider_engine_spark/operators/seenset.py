@@ -109,10 +109,10 @@ def insert(
 
     dirty_only=False: the full state — shards with no admitted rows pass
     through unchanged (cogroup emits them with an empty left side). Used
-    by the in-memory path, where "write" is free.
+    where the whole state is built at once (bootstrap, re-shard).
 
-    dirty_only=True: ONLY shards that received admitted rows. The durable
-    path appends these (with a step column) instead of rewriting the full
+    dirty_only=True: ONLY shards that received admitted rows. The
+    superstep appends these (with a step column) instead of rewriting the full
     state table — at the documented 10^10-URL sizing a full rewrite
     round-trips ~32 GiB of filter bytes through Arrow and onto disk per
     superstep even when one shard changed. The state side is additionally

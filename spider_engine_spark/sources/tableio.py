@@ -30,6 +30,7 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class TableIO:
@@ -170,8 +171,6 @@ class TableIO:
         empty = self._known_empty(entry)
         dirs = [d for d in entry["dirs"] if d not in empty]
         if not dirs:
-            from pyspark.sql.types import StructType
-
             return spark.createDataFrame(
                 [], StructType.fromJson(json.loads(entry["schema"]))
             )
@@ -189,6 +188,17 @@ class TableIO:
                 spark.read.parquet(d), allowMissingColumns=True
             )
         return out
+
+    def read_added(self, spark: SparkSession, name: str) -> DataFrame:
+        """The rows the latest commit added: its newest data dir alone (an
+        append's new snapshot; all of an overwrite). Read with the
+        committed schema, so no schema-inference job runs."""
+        entry = self._entry(name)
+        d = entry["dirs"][-1]
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        if d in self._known_empty(entry):
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(d)
 
     @staticmethod
     def _has_data_files(d: str) -> bool:

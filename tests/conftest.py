@@ -30,6 +30,22 @@ def fetched_urls_by_step(job) -> dict[int, list[str]]:
     return {k: sorted(v) for k, v in out.items()}
 
 
+def leaf_metrics(df) -> list[dict[str, int]]:
+    """One {SQL metric: value} dict per leaf of df's executed plan (a
+    scan leaf carries numFiles and numPartitions). A prior action on df
+    populates the values."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        metrics = {}
+        it = leaves.apply(i).metrics().iterator()
+        while it.hasNext():
+            kv = it.next()
+            metrics[kv._1()] = kv._2().value()
+        out.append(metrics)
+    return out
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -38,16 +38,26 @@ class _CrashAt:
         return False
 
 
-@pytest.mark.parametrize("crash_after", [0, 1, 2, 3, 4, 5])
+def _writes_of_one_step(job) -> int:
+    """Run one uncrashed superstep; return how many snapshots it wrote."""
+    budget = 100
+    with _CrashAt(job.io, budget) as counter:
+        job.run_step()
+    return budget - counter.left
+
+
+@pytest.mark.parametrize("crash_after", [0, 1, 2, 3, 4])
 def test_resume_after_crash_at_every_commit_boundary(
     spark, tmp_path_factory, crash_after
 ):
     """Run step 1 normally, crash step 2 after `crash_after` snapshot
-    commits (0 = before docs, ..., past the end = no crash), resume and
+    commits (0 = before docs, ..., 4 = before the frontier), resume and
     finish: final state must equal the replay simulator's."""
     root = str(tmp_path_factory.mktemp(f"crash{crash_after}"))
     job = CrawlJob(spark, root, seeds=SEEDS, num_shards=2, salts=2)
-    job.run_step()
+    # a clean step commits docs, seen, filter, postings, frontier: the
+    # parametrization covers every boundary only while this holds
+    assert _writes_of_one_step(job) == 5
 
     crashed = False
     with _CrashAt(job.io, crash_after):
@@ -296,7 +306,7 @@ def test_host_cache_replay_equality(spark, tmp_path_factory):
     _assert_unique_hosts(job)
 
 
-@pytest.mark.parametrize("crash_after", [0, 1, 2, 3, 4, 5])
+@pytest.mark.parametrize("crash_after", [0, 1, 2, 3, 4])
 def test_host_cache_crash_at_every_commit_boundary(
     spark, tmp_path_factory, crash_after
 ):
@@ -309,7 +319,8 @@ def test_host_cache_crash_at_every_commit_boundary(
         spark, root, seeds=SEEDS, num_shards=2, salts=2,
         host_cache=True, index=False,
     )
-    job.run_step()
+    # docs, hosts, seen, filter, frontier
+    assert _writes_of_one_step(job) == 5
     crashed = False
     with _CrashAt(job.io, crash_after):
         try:

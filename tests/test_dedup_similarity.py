@@ -20,6 +20,8 @@ from spider_engine_spark.operators.similarity import (
     make_planes,
 )
 
+from conftest import leaf_metrics
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from a warm window sill in the afternoon sun with great interest"
@@ -379,13 +381,7 @@ def test_ivf_persisted_index_probe_prunes_lists(spark, tmp_path_factory):
         assert len(rows) == 5
         # ...and the EXECUTED scan read files from only n_probe of the k
         # list partitions (runtime metrics, not plan text)
-        metrics = {}
-        leaves = page._jdf.queryExecution().executedPlan().collectLeaves()
-        for i in range(leaves.size()):
-            it = leaves.apply(i).metrics().iterator()
-            while it.hasNext():
-                kv = it.next()
-                metrics[kv._1()] = kv._2().value()
+        [metrics] = [m for m in leaf_metrics(page) if "numPartitions" in m]
         assert 0 < metrics["numPartitions"] <= n_probe, metrics
         assert 0 < metrics["numFiles"] <= n_probe, metrics
         # exact cosine within the probed lists: descending, tiebroken
@@ -809,16 +805,9 @@ def test_ivf_append_incremental(spark, tmp_path_factory):
     # FileScan leaves (base dir + append dir) and EACH must prune to
     # <= n_probe list partitions (a dict keyed on metric name would
     # silently check only the last leaf)
-    leaves = page._jdf.queryExecution().executedPlan().collectLeaves()
-    per_leaf = []
-    for i in range(leaves.size()):
-        m = {}
-        it = leaves.apply(i).metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            m[kv._1()] = kv._2().value()
-        if "numPartitions" in m:
-            per_leaf.append(m["numPartitions"])
+    per_leaf = [
+        m["numPartitions"] for m in leaf_metrics(page) if "numPartitions" in m
+    ]
     assert len(per_leaf) == 2, per_leaf
     assert all(0 < n <= 2 for n in per_leaf), per_leaf
 
@@ -909,13 +898,7 @@ def test_compaction_preserves_hive_partitioning(spark, tmp_path_factory):
         r["vec_id"] for r in rows[:2]
     ]
     # single compacted dir, pruned to n_probe list partitions
-    leaves = page._jdf.queryExecution().executedPlan().collectLeaves()
-    m = {}
-    it = leaves.apply(0).metrics().iterator()
-    while it.hasNext():
-        kv = it.next()
-        m[kv._1()] = kv._2().value()
-    assert leaves.size() == 1
+    [m] = leaf_metrics(page)
     assert 0 < m["numPartitions"] <= 2, m
 
 

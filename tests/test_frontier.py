@@ -16,7 +16,7 @@ from spider_engine_spark.operators.frontier import CrawlJob
 from spider_engine_spark.simulator import ReplaySimulator
 from spider_engine_spark.sources.tableio import TableIO
 
-from conftest import fetched_urls_by_step, seen_urls
+from conftest import fetched_urls_by_step, leaf_metrics, seen_urls
 
 N_SEEDS = 20
 N_STEPS = 3
@@ -151,14 +151,22 @@ def test_memory_mode_matches_durable(spark, tmp_path_factory):
     seeds = wm.seed_urls(8)
     root_a = str(tmp_path_factory.mktemp("crawl_dur"))
     job_a = CrawlJob(spark, root_a, seeds=seeds, num_shards=2, salts=2)
-    job_a.run(3)
+    metrics_a = job_a.run(3)
 
     root_b = str(tmp_path_factory.mktemp("crawl_mem"))
     job_b = CrawlJob(
         spark, root_b, seeds=seeds, num_shards=2, salts=2, checkpoint_every=3
     )
-    job_b.run(3)  # run() flushes at the end
+    metrics_b = job_b.run(3)  # run() flushes at the end
 
+    # the probe and the lineage counts are one code path in both modes
+    keys = (
+        "fetched", "links_extracted", "robots_blocked", "candidates",
+        "maybe_seen", "cuckoo_false_positives", "admitted",
+        "admitted_per_shard",
+    )
+    for ma, mb in zip(metrics_a, metrics_b, strict=True):
+        assert {k: ma[k] for k in keys} == {k: mb[k] for k in keys}
     assert seen_urls(job_a) == seen_urls(job_b)
     assert fetched_urls_by_step(job_a) == fetched_urls_by_step(job_b)
     # the flush really committed snapshots (read back via a fresh job)
@@ -467,18 +475,13 @@ def test_orphan_hosts_revert_precedes_attr_law_migration(spark, tmp_path_factory
 
 
 def _scan_metric_sums(df) -> dict:
-    """Sum executed-scan runtime metrics (numFiles/numPartitions) across
-    all scan leaves — the union-of-dirs read has one leaf per snapshot
-    dir. Metrics are populated by a prior action on df."""
-    sums: dict[str, int] = {}
-    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-    for i in range(leaves.size()):
-        it = leaves.apply(i).metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() in ("numFiles", "numPartitions"):
-                sums[kv._1()] = sums.get(kv._1(), 0) + kv._2().value()
-    return sums
+    """numFiles/numPartitions summed over the executed scan leaves — the
+    union-of-dirs read has one leaf per snapshot dir."""
+    leaves = leaf_metrics(df)
+    return {
+        k: sum(m.get(k, 0) for m in leaves)
+        for k in ("numFiles", "numPartitions")
+    }
 
 
 def test_docs_read_prunes_to_one_fetch_step(spark, tmp_path_factory):

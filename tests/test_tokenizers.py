@@ -16,7 +16,7 @@ from spider_engine_spark.functions.tokenizers import (
     split_true_words,
     split_whole_words,
     tf_weight,
-    tokenize_udf,
+    tokenize_cols_udf,
 )
 
 CASE = "我爱北京天安门, Hello world!"
@@ -152,7 +152,7 @@ def test_udf_and_python_paths_identical_across_dict_boundary(spark):
     from spider_engine_spark.functions.tokenizers import (
         CJK_DICT,
         split_true_words,
-        tokenize_udf,
+        tokenize_cols_udf,
     )
 
     dict_words = sorted(CJK_DICT)
@@ -169,13 +169,13 @@ def test_udf_and_python_paths_identical_across_dict_boundary(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, content string"
     )
     rows = (
-        df.select("doc_id", tokenize_udf("words")("content").alias("toks"))
+        df.select("doc_id", tokenize_cols_udf("words")("content").alias("tw"))
         .orderBy("doc_id")
         .collect()
     )
     for r in rows:
         expected = split_true_words(texts[r["doc_id"]])
-        got = [(t["term"], t["weight"]) for t in r["toks"]]
+        got = list(zip(r["tw"]["terms"], r["tw"]["weights"]))
         assert got == expected, texts[r["doc_id"]]
 
 
@@ -185,13 +185,13 @@ def test_tokenize_udf(spark):
         "doc_id long, content string",
     )
     rows = (
-        df.select("doc_id", tokenize_udf("words")("content").alias("toks"))
+        df.select("doc_id", tokenize_cols_udf("words")("content").alias("tw"))
         .orderBy("doc_id")
         .collect()
     )
-    t0 = {r["term"]: r["weight"] for r in rows[0]["toks"]}
+    t0 = dict(zip(rows[0]["tw"]["terms"], rows[0]["tw"]["weights"]))
     assert set(t0) == {"我", "爱", "北京", "天安门"}
     assert all(w == 2500 for w in t0.values())
-    t1 = {r["term"]: r["weight"] for r in rows[1]["toks"]}
+    t1 = dict(zip(rows[1]["tw"]["terms"], rows[1]["tw"]["weights"]))
     assert set(t1) == {"天安门", "上", "太阳", "升"}
-    assert rows[2]["toks"] == []
+    assert rows[2]["tw"]["terms"] == [] and rows[2]["tw"]["weights"] == []
