@@ -32,6 +32,7 @@ the k-way merge in the shuffle.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +40,7 @@ from spider_engine_spark.operators.postings import (
     TERM_BUCKETS,
     build_postings,
     merge_postings,
+    term_bucket_expr,
     with_term_bucket,
 )
 from spider_engine_spark.operators.search import (
@@ -126,18 +128,29 @@ class Table:
 
     # -- meta (S3) ------------------------------------------------------
     def _store_meta(self) -> None:
-        marker = self.spark.createDataFrame([(self.name,)], "table string")
-        self.io.write(
-            f"{self.name}__meta",
-            marker,
-            meta={
-                "fields": self.fields,
-                "pk": self.pk,
-                "next_doc_id": self.next_doc_id,
-                "hidden": sorted(self.hidden),
-                "fills": self.fills,
-                "term_buckets": self.term_buckets,
-            },
+        """Commit the table meta. Creation writes the one-row marker the
+        __meta table's versions point at; every later change is a
+        manifest-only commit on it (no Spark job)."""
+        name = f"{self.name}__meta"
+        meta = {
+            "fields": self.fields,
+            "pk": self.pk,
+            "next_doc_id": self.next_doc_id,
+            "hidden": sorted(self.hidden),
+            "fills": self.fills,
+            "term_buckets": self.term_buckets,
+        }
+        if self.io.exists(name):
+            self.io.commit_meta(name, meta)
+        else:
+            marker = self.spark.createDataFrame([(self.name,)], "table string")
+            self.io.write(name, marker, meta=meta)
+
+    def _local(self, columns: dict[str, list], schema: str) -> DataFrame:
+        """Driver-side rows as an Arrow-backed local frame: it plans as a
+        LocalRelation, so no Python worker decodes it in later scans."""
+        return self.spark.createDataFrame(
+            pd.DataFrame(columns, dtype=object), schema
         )
 
     # -- views ------------------------------------------------------------
@@ -182,17 +195,39 @@ class Table:
         keep = ["doc_id"] + [f for f in self.fields if f not in self.hidden]
         return df.select(*[c for c in keep if c in df.columns])
 
-    def postings(self) -> DataFrame:
-        return merge_postings(self.io.read(self.spark, f"{self.name}__postings"))
+    def postings(self, terms: list[str] | None = None) -> DataFrame:
+        """The merged postings; with `terms`, only the term_bucket dirs
+        that can hold them are read (none for an empty list)."""
+        name = f"{self.name}__postings"
+        if terms is None:
+            return merge_postings(self.io.read(self.spark, name))
+        return merge_postings(
+            self.io.read(
+                self.spark, name, partition_values=self._buckets_of(terms)
+            )
+        )
+
+    def _buckets_of(self, terms: list[str]) -> set[int]:
+        """The term_buckets of `terms`, from the one term_bucket_expr
+        over an inline VALUES relation: the driver folds it and collects
+        with no Spark job."""
+        if not terms:
+            return set()
+        values = ", ".join(f"(:t{i})" for i in range(len(terms)))
+        probe = self.spark.sql(
+            f"SELECT * FROM VALUES {values} AS v(term)",
+            args={f"t{i}": t for i, t in enumerate(terms)},
+        ).select(term_bucket_expr("term", self.term_buckets))
+        return {r[0] for r in probe.collect()}
 
     # -- S1 add docs ------------------------------------------------------
     def add_docs(self, rows: list[dict]) -> tuple[int, int]:
         """Batch insert of driver-side rows (the REST AddDoc analogue)."""
-        raw = self.spark.createDataFrame(
-            [
-                tuple(str(r[f]) if r.get(f) is not None else None for f in self.fields)
-                for r in rows
-            ],
+        raw = self._local(
+            {
+                f: [None if r.get(f) is None else str(r[f]) for r in rows]
+                for f in self.fields
+            },
             ", ".join(f"`{f}` string" for f in self.fields),
         )
         return self.add_docs_df(raw)
@@ -359,10 +394,23 @@ class Table:
 
     # -- M1 / M2 ----------------------------------------------------------
     def delete_doc(self, pk_value: str) -> bool:
-        hit = self.base().filter(F.col(self.pk) == pk_value).select("doc_id")
-        if not hit.take(1):
+        """Tombstone the live row holding pk_value; False if there is
+        none. One scan of base: a live PK matches at most one row, so
+        its doc_id is collected and appended from a local frame."""
+        ids = [
+            r["doc_id"]
+            for r in self.base()
+            .filter(F.col(self.pk) == pk_value)
+            .select("doc_id")
+            .collect()
+        ]
+        if not ids:
             return False
-        self.io.write(f"{self.name}__deletes", hit, mode="append")
+        self.io.write(
+            f"{self.name}__deletes",
+            self._local({"doc_id": ids}, "doc_id long"),
+            mode="append",
+        )
         return True
 
     def update_doc(self, pk_value: str, content: dict) -> bool:
@@ -432,7 +480,7 @@ class Table:
 
             return search_multi(
                 self.base(include_deleted=True),
-                self.postings(),
+                self.postings(list(keyword)),
                 keyword,
                 mode=mode,
                 search_field=field,
@@ -447,7 +495,8 @@ class Table:
             )
         return search_op(
             self.base(include_deleted=True),
-            self.postings(),
+            # keyword '' is a range scan over base: it reads no postings
+            self.postings([keyword] if keyword else []),
             keyword=keyword,
             search_field=field,
             filters=filters or [],

@@ -11,7 +11,13 @@ through this thin layer with Iceberg-like semantics:
   data dirs plus the new one (no rewrite of existing files),
 - each manifest entry carries caller metadata (per-partition lineage,
   step counters — the north_rule's checkpoint+metrics requirement),
-- time travel: `read(..., version=n)`.
+- time travel: `read(..., version=n)`,
+- reads are planned from the manifest alone: each version records its
+  schema, hive layout and parquet-less dirs at commit time, so building
+  a read runs no schema-inference job and walks no dir. A
+  partition-value read opens only the subdirs it names; a full read of
+  a dir with more leaf dirs than Spark's parallel-listing threshold
+  (32) still lists them with a job.
 
 The reference's analogue is its meta persistence + mem-partition flush
 (engine/spider.go:109-120, core/partition/partition.go:488-555); the
@@ -89,8 +95,17 @@ class TableIO:
     ) -> int:
         """Commit df as a new snapshot; returns the new version number.
 
-        partition_by writes hive-style partition dirs (readers get
-        partition pruning on those columns for free)."""
+        partition_by writes hive-style partition dirs (read() can prune
+        them by value before listing).
+
+        INVARIANT (read() depends on it): an append writes a superset of
+        the columns of the dirs it appends to, with the same types. The
+        version's schema is df's, and read() reads every dir of the
+        version with it: an older dir missing a later-added column reads
+        it as null, but a column the newest write dropped would vanish
+        from the older dirs too. Every append writer keeps this (the
+        catalog base after a metadata-only ALTER, the crawl filter's
+        `step` column)."""
         manifest = self._load_manifest(name)
         vs = manifest["versions"]
         new_version = (vs[-1]["version"] + 1) if vs else 1
@@ -156,49 +171,90 @@ class TableIO:
         return final
 
     def read(
-        self, spark: SparkSession, name: str, version: int | None = None
+        self,
+        spark: SparkSession,
+        name: str,
+        version: int | None = None,
+        partition_values: set | None = None,
     ) -> DataFrame:
+        """The snapshot's rows, planned from its manifest entry alone.
+
+        Every data dir is read with the committed schema, so no
+        schema-inference job runs (see write() for the invariant that
+        makes the newest schema cover every dir). Parquet-less dirs (a
+        zero-row dynamic-partition write leaves no file) are skipped via
+        the entry's commit-time record, not a walk; an all-empty version
+        is an empty frame of the committed schema.
+
+        partition_values prunes a hive-partitioned table BEFORE any
+        listing: only the `<dir>/<col>=<v>` subdirs of the table's first
+        partition column that exist are opened (one stat each, values
+        formatted with str()), so no partition-discovery job runs. An
+        empty set reads nothing. Every dir of the version must carry the
+        entry's hive layout, as every append writer here keeps it."""
         entry = self._entry(name, version)
-        # a zero-row DYNAMIC-PARTITION write commits a dir with no
-        # parquet files at all (unpartitioned empty writes leave a
-        # schema-only file; partitioned ones leave nothing) — such dirs
-        # are legitimate empty snapshots, not corruption, and must not
-        # brick every later read with UNABLE_TO_INFER_SCHEMA. Skip them
-        # via the manifest's commit-time record (no per-read filesystem
-        # walks on the crawl hot path; _known_empty walks only for
-        # pre-upgrade manifests); the manifest schema reconstructs a
-        # true empty frame if the whole version is empty.
         empty = self._known_empty(entry)
         dirs = [d for d in entry["dirs"] if d not in empty]
-        if not dirs:
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(entry["schema"]))
-            )
-        if len(dirs) == 1:
-            return spark.read.parquet(dirs[0])
-        # per-dir reads + union: hive-partitioned snapshot dirs cannot be
-        # listed together in one read (conflicting partition discovery
-        # roots); per-dir discovery keeps partition columns AND pruning
-        # allowMissingColumns: dirs written before a metadata-only ALTER
-        # lack the late-added columns; they read back as null and the
-        # table layer applies the fill value (catalog.Table.base)
-        out = spark.read.parquet(dirs[0])
-        for d in dirs[1:]:
-            out = out.unionByName(
-                spark.read.parquet(d), allowMissingColumns=True
-            )
+        return self._read_dirs(spark, entry, dirs, partition_values)
+
+    @staticmethod
+    def _read_schema(entry: dict) -> StructType:
+        """The committed schema in the column order a parquet read
+        yields: data columns, then the hive partition columns."""
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        part = entry.get("partition_by") or []
+        return StructType(
+            [f for f in schema.fields if f.name not in part]
+            + [f for f in schema.fields if f.name in part]
+        )
+
+    def _read_dirs(
+        self,
+        spark: SparkSession,
+        entry: dict,
+        dirs: list[str],
+        partition_values: set | None = None,
+    ) -> DataFrame:
+        """Union of per-dir reads with the entry's committed schema.
+        Hive-partitioned snapshot dirs cannot be listed together in one
+        read (conflicting partition roots), hence one read per dir. A
+        dir written before a metadata-only ALTER lacks the late-added
+        column: it reads back as null and the table layer applies the
+        fill value (catalog.Table.base)."""
+        schema = self._read_schema(entry)
+        part = entry.get("partition_by")
+        if partition_values is not None and not part:
+            raise ValueError("partition_values needs a partitioned table")
+        reads = []
+        for d in dirs:
+            if partition_values is None:
+                reads.append(spark.read.schema(schema).parquet(d))
+                continue
+            paths = [
+                p
+                for v in sorted(partition_values)
+                if os.path.isdir(p := os.path.join(d, f"{part[0]}={v}"))
+            ]
+            if paths:
+                reads.append(
+                    spark.read.schema(schema)
+                    .option("basePath", d)
+                    .parquet(*paths)
+                )
+        if not reads:
+            return spark.createDataFrame([], schema)
+        out = reads[0]
+        for r in reads[1:]:
+            out = out.unionByName(r, allowMissingColumns=True)
         return out
 
     def read_added(self, spark: SparkSession, name: str) -> DataFrame:
         """The rows the latest commit added: its newest data dir alone (an
-        append's new snapshot; all of an overwrite). Read with the
-        committed schema, so no schema-inference job runs."""
+        append's new snapshot; all of an overwrite), planned like read()."""
         entry = self._entry(name)
         d = entry["dirs"][-1]
-        schema = StructType.fromJson(json.loads(entry["schema"]))
-        if d in self._known_empty(entry):
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(d)
+        dirs = [] if d in self._known_empty(entry) else [d]
+        return self._read_dirs(spark, entry, dirs)
 
     @staticmethod
     def _has_data_files(d: str) -> bool:
@@ -270,11 +326,7 @@ class TableIO:
         big = [d for d in dirs if d not in small]
         if len(small) <= 1:
             return None
-        df = spark.read.parquet(small[0])
-        for d in small[1:]:
-            df = df.unionByName(
-                spark.read.parquet(d), allowMissingColumns=True
-            )
+        df = self._read_dirs(spark, entry, small)
         if transform is not None:
             df = transform(df)
         manifest = self._load_manifest(name)
@@ -352,6 +404,7 @@ class TableIO:
             {
                 "version": new_version,
                 "dirs": list(entry["dirs"]),
+                "empty_dirs": sorted(self._known_empty(entry)),
                 "schema": entry["schema"],
                 "meta": meta,
                 "partition_by": entry.get("partition_by"),

@@ -455,3 +455,107 @@ def test_in_batch_duplicate_pk_deterministic(cat):
         cat.drop_table("db1", f"dupdet{i}")
     assert survivors[0] == survivors[1]
     assert set(survivors[0]) == {"1", "2"}
+
+
+def test_pruned_postings_probe_is_exact(cat):
+    """Table.search reads only the probed terms' term_bucket dirs. Over
+    a 2-dir postings chain with a non-default modulus, query_term over
+    the pruned read equals query_term over the full postings for every
+    stored term, a non-ASCII term, '' and an absent term; the driver's
+    bucket equals the term_bucket written with each row."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from spider_engine_spark.operators.postings import query_term
+
+    t = cat.create_table(
+        "db1", "prune", {"k": "primary", "body": "words", "tag": "whole"},
+        term_buckets=16,
+    )
+    t.add_docs([
+        {"k": "a", "body": "red fox jumps", "tag": "animal"},
+        {"k": "b", "body": "lazy dog sleeps", "tag": "animal"},
+        {"k": "c", "body": "喜欢美食", "tag": "食物"},
+    ])
+    t.add_docs([
+        {"k": "d", "body": "red dog runs", "tag": "pet"},
+        {"k": "e", "body": "美食 fox", "tag": "food"},
+    ])
+    assert len(t.io._entry("prune__postings")["dirs"]) == 2
+    full = t.postings()
+    written = {
+        (r["term"], r["term_bucket"])
+        for r in full.select("term", "term_bucket").distinct().collect()
+    }
+    fields = sorted(r["field"] for r in full.select("field").distinct().collect())
+    for term, bucket in written:
+        assert t._buckets_of([term]) == {bucket}, term
+
+    def probe(postings, term):
+        return sorted(
+            tuple(r)
+            for r in reduce(
+                DataFrame.unionByName,
+                [
+                    query_term(postings, f, term, term_buckets=16)
+                    .withColumn("field", F.lit(f))
+                    for f in fields
+                ],
+            ).collect()
+        )
+
+    terms = sorted({term for term, _ in written}) + ["日本語", "", "absent"]
+    for term in terms:
+        assert probe(t.postings([term]), term) == probe(full, term), term
+    assert probe(full, "red") and probe(full, "absent") == []
+    assert t.postings([]).count() == 0
+
+
+def test_add_docs_rows_are_local_and_round_trip(cat, monkeypatch):
+    """add_docs' rows frame is an Arrow-backed LocalRelation (no Python
+    worker decodes it), and None, non-ASCII and numeric-string values
+    round-trip through get_doc."""
+    from spider_engine_spark.plans.catalog import Table
+
+    t = cat.create_table(
+        "db1", "local_rows",
+        {"k": "primary", "body": "words", "tag": "whole", "n": "number"},
+    )
+    seen = []
+    inner = Table.add_docs_df
+    monkeypatch.setattr(
+        Table, "add_docs_df", lambda self, raw: seen.append(raw) or inner(self, raw)
+    )
+    assert t.add_docs([
+        {"k": "1", "body": None, "tag": "日本語", "n": "42"},
+        {"k": "2", "body": "007", "tag": None, "n": 3.9},
+    ]) == (2, 0)
+    plan = seen[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert t.get_doc("1") == {
+        "doc_id": 0, "k": "1", "body": None, "tag": "日本語", "n": 42,
+    }
+    assert t.get_doc("2") == {
+        "doc_id": 1, "k": "2", "body": "007", "tag": None, "n": 3,
+    }
+
+
+def test_meta_commits_are_manifest_only(cat):
+    """Only table creation writes the __meta marker; later meta changes
+    commit to the manifest alone, and a reloaded Table sees the latest
+    counters and schema state."""
+    t = cat.create_table("db1", "metaonly", {"k": "primary", "body": "words"})
+    for i in range(3):
+        t.add_docs([{"k": str(i), "body": f"row {i}"}])
+    t.add_field("note", "whole")
+    t.add_field("gone", "whole")
+    t.delete_field("gone")
+    t.add_docs([{"k": "9", "body": "last", "note": "n"}])
+    assert len(t.io._entry("metaonly__meta")["dirs"]) == 1
+    t2 = cat.table("db1", "metaonly")
+    assert t2.next_doc_id == t.next_doc_id == 4
+    assert t2.fields == t.fields and "note" in t2.fields
+    assert t2.hidden == {"gone"} and t2.fills == t.fills
+    assert t2.get_doc("9")["note"] == "n" and t2.get_doc("0")["note"] == ""

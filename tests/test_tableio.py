@@ -148,3 +148,130 @@ def test_expire_versions_keeps_dirs_shared_with_live_versions(spark, tmp_path):
     io.expire_versions("t", keep_last=1)
     # the latest version references ALL THREE dirs — nothing may die
     assert sorted(r["v"] for r in io.read(spark, "t").collect()) == list(range(6))
+
+
+def _inferred_read(spark, io, name):
+    """The read that read() replaced: one schema-inferring parquet read
+    per non-empty data dir, unioned by name. The reference the
+    manifest-planned read must reproduce."""
+    entry = io._entry(name)
+    dirs = [d for d in entry["dirs"] if d not in set(entry["empty_dirs"])]
+    out = spark.read.parquet(dirs[0])
+    for d in dirs[1:]:
+        out = out.unionByName(spark.read.parquet(d), allowMissingColumns=True)
+    return out
+
+
+def _jobs_while(spark, build):
+    """(build(), ids of the Spark jobs that ran while it built): the
+    status store's jobs of a job group set for the call alone."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read-plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read planning")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _rows(df):
+    return sorted(
+        (tuple(r) for r in df.select(*sorted(df.columns)).collect()), key=repr
+    )
+
+
+def test_manifest_read_matches_inferred_read(spark, tmp_path):
+    """read() plans every dir from the manifest (committed schema, no
+    inference) and returns what the inferred per-dir reads returned:
+    over a partitioned append chain with an empty dir, and over chains
+    whose older dirs lack a later-added column."""
+    from pyspark.sql import functions as F
+
+    io = TableIO(str(tmp_path))
+    full = spark.range(12).select(
+        F.col("id"),
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("name"),
+        (F.col("id") % 3).cast("int").alias("b"),
+    )
+    io.write("t", full, partition_by=["b"])
+    io.write("t", full.filter(F.lit(False)), mode="append", partition_by=["b"])
+    io.write(
+        "t", full.withColumn("id", F.col("id") + 100), mode="append",
+        partition_by=["b"],
+    )
+    got, jobs = _jobs_while(spark, lambda: io.read(spark, "t"))
+    assert jobs == []
+    ref = _inferred_read(spark, io, "t")
+    assert got.schema == ref.schema  # names, order, types, nullability
+    assert _rows(got) == _rows(ref) and len(_rows(got)) == 24
+
+    # a later-added column: the older dirs read it back as null
+    io.write(
+        "t",
+        full.withColumn("id", F.col("id") + 200).withColumn("extra", F.lit("e")),
+        mode="append", partition_by=["b"],
+    )
+    got, jobs = _jobs_while(spark, lambda: io.read(spark, "t"))
+    assert jobs == []
+    ref = _inferred_read(spark, io, "t")
+    assert sorted(got.schema.fields, key=lambda f: f.name) == sorted(
+        ref.schema.fields, key=lambda f: f.name
+    )
+    assert _rows(got) == _rows(ref) and len(_rows(got)) == 36
+    # order: data columns, then partition columns, as one parquet read
+    # yields them; the inferred union appended `extra` after `b`
+    assert got.columns == ["id", "name", "extra", "b"]
+    assert ref.columns == ["id", "name", "b", "extra"]
+
+    # unpartitioned (the catalog base after an ALTER): identical order
+    io.write("u", full)
+    io.write("u", full.withColumn("extra", F.lit(7)), mode="append")
+    got, jobs = _jobs_while(spark, lambda: io.read(spark, "u"))
+    assert jobs == []
+    ref = _inferred_read(spark, io, "u")
+    assert got.schema == ref.schema
+    assert _rows(got) == _rows(ref)
+
+
+def test_partition_values_read_opens_only_named_buckets(spark, tmp_path):
+    """A partition-value read of a 64-bucket table stats the named
+    bucket dirs and lists nothing else: no Spark job while the frame is
+    built, and the rows equal the full read's rows of those buckets."""
+    from pyspark.sql import functions as F
+
+    io = TableIO(str(tmp_path))
+    df = spark.range(640).select(
+        F.col("id"), (F.col("id") % 64).cast("int").alias("term_bucket")
+    )
+    io.write("p", df.repartition("term_bucket"), partition_by=["term_bucket"])
+    io.write(
+        "p",
+        df.filter(F.col("term_bucket") < 8).withColumn("id", F.col("id") + 1000),
+        mode="append", partition_by=["term_bucket"],
+    )
+    got, jobs = _jobs_while(
+        spark, lambda: io.read(spark, "p", partition_values={3, 40, 99})
+    )
+    assert jobs == []
+    full = io.read(spark, "p")
+    assert got.schema == full.schema
+    want = full.filter(F.col("term_bucket").isin(3, 40))
+    assert _rows(got) == _rows(want) and len(_rows(got)) == 30
+
+    # the unpruned read still lists the 64 bucket dirs with a Spark job
+    # (above the 32-path parallel-listing threshold): what pruning avoids
+    _, jobs = _jobs_while(spark, lambda: io.read(spark, "p"))
+    assert jobs
+
+    none, jobs = _jobs_while(
+        spark, lambda: io.read(spark, "p", partition_values=set())
+    )
+    assert jobs == [] and none.count() == 0
+    assert none.columns == full.columns
+
+    io.write("flat", df)
+    with pytest.raises(ValueError, match="partitioned"):
+        io.read(spark, "flat", partition_values={1})
