@@ -103,9 +103,10 @@ class SpiderController:
     """Handler logic, separated from HTTP plumbing (unit-testable).
 
     Every route runs inside its own pins.scope(): whatever a request
-    pins (a search's narrow candidate set) is released once its
-    response is built, so a long-lived server does not accumulate
-    cached blocks."""
+    pins is released once its response is built, so a long-lived server
+    does not accumulate cached blocks. A search pins nothing (it is one
+    lazy plan) and an ingest frees its own checkpoints; the scope guards
+    any route that comes to pin."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.catalog = Catalog(spark, root)
@@ -211,7 +212,7 @@ class SpiderController:
         mode = p.get("mode", "or")
         # validate the list request shape up front so a malformed call
         # gets a reference-style validation envelope, not the generic
-        # handler-exception one (search_multi would raise ValueError)
+        # handler-exception one (search() would raise ValueError)
         if isinstance(value, (list, tuple)):
             if not value:
                 return error("search value list must not be empty")

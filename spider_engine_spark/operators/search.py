@@ -22,10 +22,12 @@ Reference quirks reproduced deliberately (bit-parity with its tests):
   add an ascending doc_id tiebreak so results are deterministic
   (SURVEY.md §7.3 risk 3).
 
-Scale notes: the ranked candidate set is bounded by the postings of one
-term; the global row_number window below runs on that already-small set
-(the reference clamps pages to 100 anyway). The probe itself is a pruned
-scan of the postings table; the hydration join broadcasts the ranked page.
+Scale notes: one search is one lazy plan with no driver action before
+the caller's collect. The probe is a pruned scan of the postings table.
+df is a count(1) window over the narrow filtered (doc_id, weight) rows,
+so it runs in one task over every filtered candidate; a TakeOrdered to
+the page bound (the reference clamps pages to 100) then feeds the
+row_number window, and the hydration join broadcasts the ranked page.
 """
 
 from __future__ import annotations
@@ -36,8 +38,13 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from spider_engine_spark.operators.postings import GOD_FIELD, query_term
-from spider_engine_spark.pins import pin
+from spider_engine_spark.operators.postings import (
+    GOD_FIELD,
+    TERM_BUCKETS,
+    multi_term_and,
+    multi_term_or,
+    query_term,
+)
 
 MAX_INT64 = (1 << 63) - 1
 DEFAULT_PAGE = 100  # table.go:1030-1038
@@ -185,60 +192,25 @@ def _schema_kinds(
     return numeric_fields, temporal_types
 
 
-def _hydrated_candidates(
-    cand: DataFrame,
-    base: DataFrame,
-    doc_id: str,
-    deleted: DataFrame | None,
-    filters: Sequence[SearchFilter],
-    numeric_fields: set[str],
-    temporal_types: dict[str, str],
-) -> DataFrame:
-    """Q4 delete anti-join + hydration + Q5 AND-filters — shared by the
-    single-term and multi-term pipelines."""
-    if deleted is not None:  # Q4, bitmap anti-join (partition.go:716-726)
-        cand = cand.join(
-            F.broadcast(
-                deleted.select(F.col(doc_id).cast("long").alias("doc_id"))
-            ),
-            "doc_id",
-            "left_anti",
-        )
-    # Q5: AND-filters evaluate over the forward index == the base table.
-    hydrated = cand.join(
-        base.withColumn("doc_id", F.col(doc_id).cast("long")), "doc_id"
-    )
-    cond = and_filters(hydrated, filters, numeric_fields, temporal_types)
-    if cond is not None:
-        hydrated = hydrated.filter(cond)
-    return hydrated
-
-
 def _rank_clamp_page(
     scored: DataFrame,
-    total_col: str,
+    top_k: int,
     offset: int,
     size: int,
     keep_total: bool,
-    drop_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Q8/Q9 rank + the reference's pagination clamp (table.go:1029-1039),
-    shared by search() and search_multi(). The page can only ever need
-    the top max(offset+size, 100) rows (the clamp falls back to
-    (0, min(100, total))), so rank = distributed TakeOrdered to that
-    bound, then row_number over the tiny pre-ranked set — a hot term's
-    million-row posting list never funnels through one task."""
-    top_k = (
-        max(offset + size, DEFAULT_PAGE)
-        if size > 0 and offset >= 0
-        else DEFAULT_PAGE
-    )
+    """Q8/Q9 rank + the reference's pagination clamp (table.go:1029-1039)
+    over the narrow scored rows, whose `n_` column is the clamp total.
+    The page can only ever need the top top_k = max(offset+size, 100)
+    rows (the clamp falls back to (0, min(100, total))), so rank =
+    TakeOrdered to top_k, then row_number over that tiny pre-ranked
+    set."""
     pre = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
     w_rank = Window.partitionBy(F.lit(1)).orderBy(
         F.desc("score"), F.asc("doc_id")
     )
     ranked = pre.withColumn("rn_", F.row_number().over(w_rank))
-    total = F.col(total_col)
+    total = F.col("n_")
     bad = (
         (F.lit(offset) < 0)
         | (F.lit(size) <= 0)
@@ -252,16 +224,15 @@ def _rank_clamp_page(
     if keep_total:
         # expose the pre-pagination match count (the reference's
         # SearchDocs returns (docs, total), table.go:1021)
-        return page.withColumnRenamed(total_col, "_total").drop(
-            "rn_", *drop_cols
-        )
-    return page.drop(total_col, "rn_", *drop_cols)
+        return page.withColumnRenamed("n_", "_total").drop("rn_")
+    return page.drop("n_", "rn_")
 
 
 def search(
     base: DataFrame,
     postings: DataFrame,
-    keyword: str,
+    keyword: str | Sequence[str],
+    mode: str = "or",
     search_field: str = "",
     filters: Sequence[SearchFilter] = (),
     offset: int = 0,
@@ -271,71 +242,113 @@ def search(
     doc_id: str = "doc_id",
     deleted: DataFrame | None = None,
     numeric_fields: set[str] | None = None,
-    term_buckets: int | None = None,
+    term_buckets: int = TERM_BUCKETS,
     keep_total: bool = False,
 ) -> DataFrame:
     """Full search: returns the hydrated ranked page with a `score` column.
 
-    search_field '' routes to the god field (table.go:997-1000);
-    keyword '' is a full range scan with weight 0 (partition.go:701-704).
+    search_field '' routes to the god field (table.go:997-1000).
     max_doc is the table's NextDocId (pass row-count for dense ids).
-    df = |filtered candidate set|, the reference's semantics
-    (table.go:1116). A term no live row holds returns an empty page.
 
-    The narrow candidate set is pinned in the caller's pins.scope().
+    keyword is one term (reference-exact) or a LIST of terms:
 
-    Plan shape: filters hydrate against the forward index as before,
-    but ranking runs over the narrow persisted (doc_id, weight) set —
-    count job for df, TakeOrdered over 16-byte rows — and only the
-    FINAL page (≤ max(offset+size, 100) rows) is joined back to `base`
-    for its payload columns, as a broadcast of the page. The former
-    shape broadcast a 1-row stats agg but carried every base column
-    (document text included) through scoring and the TakeOrdered, and
-    evaluated the candidate subplan twice (once for the stats agg,
-    once for scoring).
+    - '' is a full range scan with weight 0 (partition.go:701-704);
+    - a term scores TF-IDF with df = |filtered candidate set|, the
+      reference's semantics (table.go:1116). A term no live row holds,
+      or a filter no candidate passes, returns an empty page.
+    - a list surfaces the Spark-native multi-term operators
+      (operators/postings.py). The reference's request model took a
+      query list (the dead SearchDocIds loop, search/search.go:263-320)
+      but only single-term search shipped. mode='or': docs matching ANY
+      term, score = sum of per-term TF-IDF (multi_term_or's law);
+      mode='and': docs matching ALL terms, score = summed raw weights
+      (multi_term_and; no idf term — an intersection has no meaningful
+      per-term df weighting once every doc matches every term).
+
+    Filters, delete anti-join, ranking (score desc, doc_id tiebreak) and
+    the reference's pagination clamp are the same for every keyword
+    shape; the clamp total is the FILTERED candidate count. A
+    single-element list degrades to the mode's semantics over one term,
+    which for 'or' equals single-term search when no filters/deletes
+    apply. With filters or deletes the returned SCORE values can differ:
+    multi_term_or scores with df = the term's unfiltered posting-list
+    length, while a single term recomputes df over the filtered
+    candidate set — ranking order is unaffected for a single term (a
+    common positive idf factor), only the absolute score scale.
+
+    Plan shape: one lazy plan, no driver action while it is built.
+    Filters hydrate against the forward index; ranking runs over the
+    narrow filtered (doc_id, weight) rows, where a count(1) window
+    yields both df and the clamp total. A TakeOrdered cuts them to the
+    page bound top_k = max(offset+size, 100), and only the final page is
+    joined back to `base` for its payload columns, as a broadcast. The
+    page is at most top_k rows, so its closing sort plans as one
+    TakeOrderedAndProject: no range exchange and no sampling job.
     """
     fld = search_field or GOD_FIELD
     numeric_fields, temporal_types = _schema_kinds(base, numeric_fields)
 
+    # Q1 candidate step: (doc_id, w_) rows, w_ the raw weight of one term
+    # or the finished score of a term list. The private name keeps the
+    # hydration join unambiguous when base has a `weight` or `score`.
+    # A list's terms are deduplicated, and an empty list rejected, by
+    # the multi-term operators themselves.
     if keyword == "":
         cand = base.select(
             F.col(doc_id).cast("long").alias("doc_id"),
-            F.lit(0).alias("weight"),
+            F.lit(0).alias("w_"),
         )
-    elif term_buckets is not None:
-        cand = query_term(postings, fld, keyword, term_buckets=term_buckets)
+    elif isinstance(keyword, str):
+        cand = query_term(
+            postings, fld, keyword, term_buckets=term_buckets
+        ).withColumnRenamed("weight", "w_")
+    elif mode == "or":
+        cand = multi_term_or(
+            postings, fld, list(keyword), max_doc, term_buckets=term_buckets
+        ).select("doc_id", F.col("score").alias("w_"))
+    elif mode == "and":
+        cand = multi_term_and(
+            postings, fld, list(keyword), term_buckets=term_buckets
+        ).select("doc_id", F.col("sum_weight").alias("w_"))
     else:
-        cand = query_term(postings, fld, keyword)
+        raise ValueError(f"unknown multi-term mode {mode!r}")
 
-    hydrated = _hydrated_candidates(
-        cand, base, doc_id, deleted, filters, numeric_fields, temporal_types
+    if deleted is not None:  # Q4, bitmap anti-join (partition.go:716-726)
+        cand = cand.join(
+            F.broadcast(
+                deleted.select(F.col(doc_id).cast("long").alias("doc_id"))
+            ),
+            "doc_id",
+            "left_anti",
+        )
+    # Q5: AND-filters evaluate over the forward index == the base table.
+    based = base.withColumn("doc_id", F.col(doc_id).cast("long"))
+    hydrated = cand.join(based, "doc_id")
+    cond = and_filters(hydrated, filters, numeric_fields, temporal_types)
+    if cond is not None:
+        hydrated = hydrated.filter(cond)
+    # Q7: df = |filtered candidate set| = the clamp total, a window count
+    # over the narrow rows; an empty set has no row to score
+    narrow = hydrated.select("doc_id", "w_").withColumn(
+        "n_", F.count(F.lit(1)).over(Window.partitionBy())
     )
-
-    # Q7: df = |filtered candidate set|, counted on the narrow
-    # materialized candidates (plain evictable cache, lineage retained)
-    # and emitted as a literal — no stats broadcast, no second
-    # evaluation of the candidate subplan.
-    narrow = pin(hydrated.select("doc_id", "weight"))
-    df_count = narrow.count()
-    # df = 0 means there is no row to score, and the literal
-    # log10(max_doc / 0) would fail constant folding under ANSI
     score = (
-        tfidf_score(F.col("weight"), max_doc, F.lit(df_count).cast("long"))
-        if df_count
-        else F.lit(None).cast("long")
+        tfidf_score(F.col("w_"), max_doc, F.col("n_"))
+        if isinstance(keyword, str)
+        else F.col("w_")
     )
-    scored = narrow.withColumn("score", score).withColumn(
-        "df_", F.lit(df_count).cast("long")
+    top_k = (
+        max(offset + size, DEFAULT_PAGE)
+        if size > 0 and offset >= 0
+        else DEFAULT_PAGE
     )
     page = _rank_clamp_page(
-        scored, "df_", offset, size, keep_total, drop_cols=("weight",)
+        narrow.select("doc_id", "n_", score.alias("score")),
+        top_k, offset, size, keep_total,
     )
-    # Q10: hydrate ONLY the ranked page (broadcast — it is clamped to
-    # ≤ max(offset+size, 100) rows), reproducing the former column
-    # order: doc_id, base columns, [_total,] score — including the
-    # former withColumn semantics where a base column named `score`
-    # was replaced IN PLACE by the rank score.
-    based = base.withColumn("doc_id", F.col(doc_id).cast("long"))
+    # Q10: hydrate ONLY the ranked page (broadcast), in the column order
+    # doc_id, base columns, [_total,] score; a base column named `score`
+    # is replaced IN PLACE by the rank score.
     base_cols = [c for c in based.columns if c != "doc_id"]
     page_r = page.withColumnRenamed("score", "__rank_score")
     out = based.join(F.broadcast(page_r), "doc_id")
@@ -348,101 +361,11 @@ def search(
         cols.append(page_r["_total"])
     if "score" not in base_cols:
         cols.append(F.col("__rank_score").alias("score"))
-    # the hydration join loses the page's rank order — restore it (the
-    # page is ≤ max(offset+size, 100) rows; the sort is driver-cheap)
-    return out.select(*cols).orderBy(F.desc("score"), F.asc("doc_id"))
-
-
-def search_multi(
-    base: DataFrame,
-    postings: DataFrame,
-    terms: Sequence[str],
-    mode: str = "or",
-    search_field: str = "",
-    filters: Sequence[SearchFilter] = (),
-    offset: int = 0,
-    size: int = 0,
-    *,
-    max_doc: int,
-    doc_id: str = "doc_id",
-    deleted: DataFrame | None = None,
-    numeric_fields: set[str] | None = None,
-    term_buckets: int | None = None,
-    keep_total: bool = False,
-) -> DataFrame:
-    """Multi-term search: hydrated ranked page for a LIST of query terms.
-
-    The reference's request model took a query list (the dead
-    SearchDocIds loop, search/search.go:263-320) but only single-term
-    search shipped; this surfaces the Spark-native multi-term operators
-    (operators/postings.py) through the same filter/pagination pipeline
-    as single-term search:
-
-    - mode='or': docs matching ANY term, score = sum of per-term TF-IDF
-      (multi_term_or's law).
-    - mode='and': docs matching ALL terms, score = summed raw weights
-      (multi_term_and; no idf term — an intersection has no meaningful
-      per-term df weighting once every doc matches every term).
-
-    Filters, delete anti-join, ranking (score desc, doc_id tiebreak) and
-    the reference's pagination clamp behave exactly as in search(); the
-    clamp total is the FILTERED candidate count (count semantics — the
-    per-term postings df statistic is not meaningful post-intersection).
-    A single-element list degrades to the mode's semantics over one term,
-    which for 'or' equals single-term search() when no filters/deletes
-    apply. With filters or deletes the returned SCORE values can differ:
-    multi_term_or scores with df = the term's unfiltered posting-list
-    length, while search() recomputes df over the filtered candidate set
-    — ranking order is unaffected for a single term (a common positive
-    idf factor), only the absolute score scale.
-    """
-    from spider_engine_spark.operators.postings import (
-        TERM_BUCKETS,
-        multi_term_and,
-        multi_term_or,
-    )
-
-    terms = list(dict.fromkeys(terms))
-    if not terms:
-        raise ValueError("search_multi needs at least one term")
-    if mode not in ("or", "and"):
-        raise ValueError(f"unknown multi-term mode {mode!r}")
-    fld = search_field or GOD_FIELD
-    numeric_fields, temporal_types = _schema_kinds(base, numeric_fields)
-    buckets = term_buckets if term_buckets is not None else TERM_BUCKETS
-
-    if mode == "or":
-        cand = multi_term_or(
-            postings, fld, terms, max_doc, term_buckets=buckets
-        ).select("doc_id", "score")
-    else:
-        cand = multi_term_and(
-            postings, fld, terms, term_buckets=buckets
-        ).select("doc_id", F.col("sum_weight").alias("score"))
-
-    hydrated = _hydrated_candidates(
-        cand, base, doc_id, deleted, filters, numeric_fields, temporal_types
-    )
-    # same narrow-rank shape as search(): count the materialized
-    # (doc_id, score) candidates once for the clamp total, rank the
-    # narrow rows, and hydrate only the final page (broadcast) —
-    # column order preserved: doc_id, score, base columns[, _total].
-    narrow = pin(hydrated.select("doc_id", "score"))
-    total = narrow.count()
-    with_total = narrow.withColumn("total_", F.lit(total).cast("long"))
-    page = _rank_clamp_page(with_total, "total_", offset, size, keep_total)
-    based = base.withColumn("doc_id", F.col(doc_id).cast("long"))
-    base_cols = [c for c in based.columns if c != "doc_id"]
-    page_r = page.withColumnRenamed("score", "__rank_score")
-    out = based.join(F.broadcast(page_r), "doc_id")
-    cols = (
-        [F.col("doc_id"), F.col("__rank_score").alias("score")]
-        + [based[c] for c in base_cols]
-        + ([page_r["_total"]] if keep_total else [])
-    )
-    # restore the page's rank order lost by the hydration join
-    return out.select(*cols).orderBy(
-        F.desc("__rank_score"), F.asc("doc_id")
+    # the hydration join loses the page's rank order — restore it
+    return (
+        out.select(*cols)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(top_k)
     )
 
 

@@ -80,6 +80,14 @@ def _typed_column(ftype: str, c: F.Column) -> F.Column:
     return c.cast("string")
 
 
+def _check_field_names(names) -> None:
+    """Reject a user field named like the engine's internal docId column
+    (the reference keeps docIds outside the user schema too,
+    design.md:83-87), at create and at ALTER."""
+    if "doc_id" in names:
+        raise ValueError("'doc_id' is a reserved column name")
+
+
 class Table:
     def __init__(
         self,
@@ -106,10 +114,7 @@ class Table:
             bad = set(fields.values()) - FIELD_TYPES
             if bad:
                 raise ValueError(f"unknown field types: {bad}")
-            if "doc_id" in fields:
-                # the engine's internal docId column (the reference keeps
-                # docIds outside the user schema too, design.md:83-87)
-                raise ValueError("'doc_id' is a reserved column name")
+            _check_field_names(fields)
             pks = [f for f, t in fields.items() if t == "primary"]
             if len(pks) > 1:
                 raise ValueError("at most one primary field")
@@ -461,11 +466,11 @@ class Table:
         mode: str = "or",
     ) -> DataFrame:
         """Single-term search (keyword: str, reference-exact), or
-        multi-term (keyword: list[str]) routed to the Spark-native
-        scored-OR / AND operators with the same filters + pagination —
-        the query-LIST surface the reference's request model declared but
-        never shipped (search/search.go:263-320). mode applies to the
-        list form only: 'or' (scored union) or 'and' (intersection)."""
+        multi-term (keyword: list[str]) through the same operator with
+        the same filters + pagination — the query-LIST surface the
+        reference's request model declared but never shipped
+        (search/search.go:263-320). mode applies to the list form only:
+        'or' (scored union) or 'and' (intersection)."""
         self.check_filters(list(filters or []))
         numeric = {
             f for f, t in self.fields.items() if t in ("number", "time")
@@ -475,29 +480,16 @@ class Table:
             if self.io.exists(f"{self.name}__deletes")
             else None
         )
-        if isinstance(keyword, (list, tuple)):
-            from spider_engine_spark.operators.search import search_multi
-
-            return search_multi(
-                self.base(include_deleted=True),
-                self.postings(list(keyword)),
-                keyword,
-                mode=mode,
-                search_field=field,
-                filters=filters or [],
-                offset=offset,
-                size=size,
-                max_doc=self.next_doc_id,
-                deleted=deleted,
-                numeric_fields=numeric,
-                term_buckets=self.term_buckets,
-                keep_total=keep_total,
-            )
+        if isinstance(keyword, str):
+            # keyword '' is a range scan over base: it reads no postings
+            terms = [keyword] if keyword else []
+        else:
+            terms = list(keyword)
         return search_op(
             self.base(include_deleted=True),
-            # keyword '' is a range scan over base: it reads no postings
-            self.postings([keyword] if keyword else []),
-            keyword=keyword,
+            self.postings(terms),
+            keyword,
+            mode=mode,
             search_field=field,
             filters=filters or [],
             offset=offset,
@@ -513,6 +505,7 @@ class Table:
     def add_field(self, name: str, ftype: str) -> None:
         if ftype not in FIELD_TYPES or ftype == "primary":
             raise ValueError(f"cannot add field of type {ftype!r}")
+        _check_field_names([name])
         if name in self.fields:
             raise ValueError(f"field {name} exists")
         self.fields[name] = ftype

@@ -129,6 +129,8 @@ def test_schema_evolution(cat):
     dirs_before = list(t.io._entry("evo__base")["dirs"])
     t.add_field("score", "number")
     assert t.io._entry("evo__base")["dirs"] == dirs_before
+    with pytest.raises(ValueError, match="reserved"):
+        t.add_field("doc_id", "number")  # the engine's docId column
     t.add_docs([{"k": "y", "body": "hello again", "score": 7}])
     doc_x, doc_y = t.get_doc("x"), t.get_doc("y")
     assert doc_y["score"] == 7
@@ -559,3 +561,42 @@ def test_meta_commits_are_manifest_only(cat):
     assert t2.fields == t.fields and "note" in t2.fields
     assert t2.hidden == {"gone"} and t2.fills == t.fills
     assert t2.get_doc("9")["note"] == "n" and t2.get_doc("0")["note"] == ""
+
+
+def test_search_is_one_lazy_plan(cat, spark):
+    """For a term, '', OR and AND, Table.search builds its frame without
+    running a Spark job, collecting it caches nothing, and the executed
+    plan has no range exchange and no cached-frame scan."""
+    import uuid
+
+    sc = spark.sparkContext
+    t = cat.create_table(
+        "db1", "lazyplan", {"k": "primary", "body": "words", "n": "number"}
+    )
+    t.add_docs([
+        {"k": "1", "body": "red fox", "n": 1},
+        {"k": "2", "body": "red dog", "n": 2},
+    ])
+    t.add_docs([{"k": "3", "body": "red dog runs", "n": 3}])
+    t.delete_doc("1")
+    for kw, mode in (
+        ("red", "or"), ("", "or"), (["red", "dog"], "or"),
+        (["red", "dog"], "and"),
+    ):
+        group = f"search-plan-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "search planning")
+        try:
+            frame = t.search(
+                kw, field="body", mode=mode, size=1, keep_total=True,
+                filters=[SearchFilter("n", ">", value=3)],  # >= 3
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], kw
+        persisted = len(sc._jsc.getPersistentRDDs())
+        rows = frame.collect()
+        assert [(r["k"], r["_total"]) for r in rows] == [("3", 1)], kw
+        assert len(sc._jsc.getPersistentRDDs()) == persisted, kw
+        plan = frame._jdf.queryExecution().executedPlan().toString().lower()
+        assert "rangepartitioning" not in plan, plan
+        assert "inmemorytablescan" not in plan, plan

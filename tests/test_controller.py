@@ -221,7 +221,54 @@ def test_search_for_absent_term_is_empty(api):
     )
     assert r["code"] == 0, r
     assert r["data"] == {"docs": [], "total": 0}
+    # a filter that removes every candidate leaves the same empty set
+    r = api(
+        "POST",
+        "/_search",
+        {
+            "database": "adb", "table": "t", "fieldName": "body",
+            "value": "alpha",
+            "filters": [{"field": "body", "type": "=", "str": "nothing"}],
+        },
+    )
+    assert r["code"] == 0, r
+    assert r["data"] == {"docs": [], "total": 0}
     assert api("DELETE", "/adb")["code"] == 0
+
+
+def test_search_on_table_with_score_field(api):
+    """A user field named `score` does not collide with the rank score:
+    single-term, OR and AND searches all answer with the right keys and
+    totals."""
+    assert api("POST", "/sdb")["code"] == 0
+    fields = [
+        {"name": "k", "type": "primary"},
+        {"name": "text", "type": "words"},
+        {"name": "score", "type": "number"},
+    ]
+    assert api("POST", "/sdb/t", fields)["code"] == 0
+    for k, text, score in (
+        ("1", "alpha beta", 5), ("2", "alpha", 7), ("3", "beta gamma", 9),
+    ):
+        body = {"text": text, "score": score}
+        assert api("POST", f"/sdb/t/{k}", body)["code"] == 0
+
+    def search(value, mode="or"):
+        r = api(
+            "POST",
+            "/_search",
+            {
+                "database": "sdb", "table": "t", "fieldName": "text",
+                "value": value, "mode": mode,
+            },
+        )
+        assert r["code"] == 0, r
+        return {d["Key"] for d in r["data"]["docs"]}, r["data"]["total"]
+
+    assert search("alpha") == ({"1", "2"}, 2)
+    assert search(["alpha", "beta"]) == ({"1", "2", "3"}, 3)
+    assert search(["alpha", "beta"], "and") == ({"1"}, 1)
+    assert api("DELETE", "/sdb")["code"] == 0
 
 
 def test_multi_term_search_via_rest(api):
