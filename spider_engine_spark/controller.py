@@ -5,6 +5,7 @@ controller/{database,document}.go's handlers route-for-route, so a user
 of the reference can point the same curl scripts here:
 
     GET    /_status            engine-wide status walk (spider.go:171-186)
+                               plus the session's cache occupancy
     GET    /_search            search (JSON body: engine.SearchParam)
     GET    /db/table/key       get document
     POST   /db                 create database
@@ -38,7 +39,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 from spider_engine_spark.operators.search import SearchFilter
-from spider_engine_spark.pins import scope
+from spider_engine_spark.pins import occupancy, scope
 from spider_engine_spark.plans.catalog import Catalog
 
 RET_OK, RET_FAILED, RET_ERROR = 0, 1, 2
@@ -115,7 +116,10 @@ class SpiderController:
     # -- routes ---------------------------------------------------------
     @scope()
     def status(self) -> dict:
-        return ok(self.catalog.status())
+        """The engine walk plus the session's cache occupancy."""
+        return ok(
+            {**self.catalog.status(), "cache": occupancy(self.catalog.spark)}
+        )
 
     @scope()
     def create_database(self, db: str) -> dict:
@@ -220,6 +224,11 @@ class SpiderController:
                 return error("search value list items must be strings")
         if mode not in ("or", "and"):
             return error(f"unknown search mode {mode!r} (use 'or' or 'and')")
+        # the reply carries no rank score: rank under a name no field
+        # holds, so a stored field named `score` reaches Detail
+        rank = "_score"
+        while rank in t.fields:
+            rank = "_" + rank
         page = t.search(
             list(value) if isinstance(value, (list, tuple)) else value,
             field=p.get("fieldName", ""),
@@ -228,6 +237,7 @@ class SpiderController:
             size=int(p.get("size", 0)),
             keep_total=True,
             mode=mode,
+            rank_col=rank,
         ).collect()
         docs = []
         total = 0
@@ -237,7 +247,7 @@ class SpiderController:
             # SearchDocs returns (docs, total), table.go:1021)
             total = d.pop("_total", total)
             d.pop("doc_id", None)
-            d.pop("score", None)
+            d.pop(rank, None)
             docs.append({"Key": d.get(t.pk, ""), "Detail": d})
         return ok({"docs": docs, "total": total})
 

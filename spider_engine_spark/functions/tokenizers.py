@@ -22,9 +22,14 @@ Exposed in three forms:
 1. pure-Python functions (pytest oracles, the replay simulator),
 2. `tokenize_cols_udf(mode)` — a vectorized pandas UDF returning
    struct<terms array<string>, weights array<int>> (Arrow transport, no
-   per-row Python at the Spark API surface),
-3. a pure-JVM fast path for whitespace corpora lives in
-   operators/postings.py (build_postings_native) — no Python at all.
+   per-row Python at the Spark API surface). operators/postings.py
+   plans it as the fallback of the JVM words ladder (CJK, oversize
+   text) and for rune fields; the catalog ingest plans it only for a
+   batch in which some row needs it (postings.python_tokens_law), so an
+   all-ASCII REST add starts no Python worker,
+3. pure-JVM paths in operators/postings.py: the words ladder for
+   printable-ASCII text (field_tokens) and build_postings_native for
+   whitespace corpora — no Python at all.
 """
 
 from __future__ import annotations

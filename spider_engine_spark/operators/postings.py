@@ -89,6 +89,26 @@ def _native_words_gate(col: Column) -> Column:
     )
 
 
+def python_tokens_law(fields: dict[str, str]) -> Column:
+    """THE law of which rows need the Python tokenizer, for the fields
+    and god field build_token_stream tokenizes: true for a row when a
+    non-NULL words value — an indexed words field, or the god column —
+    fails _native_words_gate, or when an indexed field's mode has no
+    native law (rune). NULL needs no check: it yields no tokens on
+    either path. A frame where the law is false on every row can be
+    tokenized with python=False (field_tokens) and give the same
+    tokens."""
+    if any(m not in ("whole", "semicolon", "words") for m in fields.values()):
+        return F.lit(True)
+    words = [F.col(f) for f, m in fields.items() if m == "words"]
+    if fields:
+        words.append(god_column(list(fields)))
+    need = F.lit(False)
+    for c in words:
+        need = need | (c.isNotNull() & ~_native_words_gate(c))
+    return need
+
+
 def _native_words_tw(df: DataFrame, doc_id: str, field: str) -> DataFrame:
     """(doc_id, tw) for printable-ASCII content — pure JVM.
 
@@ -184,7 +204,7 @@ def _native_tw(df: DataFrame, doc_id: str, field: str, mode: str) -> DataFrame:
 
 
 def field_tokens(
-    df: DataFrame, doc_id: str, field: str, mode: str
+    df: DataFrame, doc_id: str, field: str, mode: str, python: bool = True
 ) -> DataFrame:
     """I1: one (doc_id, field, term, weight) row per token occurrence.
 
@@ -193,17 +213,25 @@ def field_tokens(
     oversize) through the pandas UDF. The UDF emits parallel primitive
     arrays (terms, weights) rather than array<struct>: the Arrow
     transfer of primitive lists is several times cheaper than
-    list-of-dict, and arrays_zip+explode is JVM-side."""
+    list-of-dict, and arrays_zip+explode is JVM-side.
+
+    python=False leaves the words fallback branch out of the plan, so
+    no Python worker starts. Pass it only when python_tokens_law is
+    false on every row of df: a row failing the gate would otherwise
+    yield no tokens. A rune field has no native law and always runs
+    the UDF."""
     if mode in ("whole", "semicolon"):
         tokked = _native_tw(df, doc_id, field, mode)
     elif mode == "words":
         gate = _native_words_gate(F.col(field))
-        tokked = _native_words_tw(df.filter(gate), doc_id, field).unionByName(
-            df.filter(~F.coalesce(gate, F.lit(False))).select(
-                F.col(doc_id).cast("long").alias("doc_id"),
-                tokenize_cols_udf(mode)(F.col(field)).alias("tw"),
+        tokked = _native_words_tw(df.filter(gate), doc_id, field)
+        if python:
+            tokked = tokked.unionByName(
+                df.filter(~F.coalesce(gate, F.lit(False))).select(
+                    F.col(doc_id).cast("long").alias("doc_id"),
+                    tokenize_cols_udf(mode)(F.col(field)).alias("tw"),
+                )
             )
-        )
     else:
         tokked = df.select(
             F.col(doc_id).cast("long").alias("doc_id"),
@@ -239,6 +267,7 @@ def build_token_stream(
     doc_id: str,
     fields: dict[str, str],
     god: bool = True,
+    python: bool = True,
 ) -> DataFrame:
     """Tokenize every indexed field (+ god field) into one token stream.
 
@@ -252,14 +281,21 @@ def build_token_stream(
     is strictly slower on 32 cores — and at 1000 executors the double
     tokenize scales embarrassingly-parallel while shuffle bytes are the
     scarce resource, so the single-shuffle shape is kept deliberately.
+
+    python is field_tokens' flag, for every words field and the god
+    field alike.
     """
-    parts = [field_tokens(df, doc_id, f, m) for f, m in fields.items()]
+    parts = [
+        field_tokens(df, doc_id, f, m, python) for f, m in fields.items()
+    ]
     if god and fields:
         god_df = df.select(
             F.col(doc_id).cast("long").alias("doc_id"),
             god_column(list(fields)).alias(GOD_FIELD),
         )
-        parts.append(field_tokens(god_df, "doc_id", GOD_FIELD, "words"))
+        parts.append(
+            field_tokens(god_df, "doc_id", GOD_FIELD, "words", python)
+        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -300,8 +336,17 @@ def build_postings(
     doc_id: str,
     fields: dict[str, str],
     god: bool = True,
+    python: bool = True,
 ) -> DataFrame:
-    return aggregate_postings(build_token_stream(df, doc_id, fields, god))
+    """I1+I2: the postings of df's indexed fields (and god field).
+
+    python=True (the default) plans the Python tokenizer fallback for
+    every words field; python=False leaves it out and is exact only
+    when python_tokens_law(fields) is false on every row of df
+    (field_tokens)."""
+    return aggregate_postings(
+        build_token_stream(df, doc_id, fields, god, python)
+    )
 
 
 def build_postings_native(

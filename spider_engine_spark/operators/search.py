@@ -244,8 +244,12 @@ def search(
     numeric_fields: set[str] | None = None,
     term_buckets: int = TERM_BUCKETS,
     keep_total: bool = False,
+    rank_col: str = "score",
 ) -> DataFrame:
-    """Full search: returns the hydrated ranked page with a `score` column.
+    """Full search: returns the hydrated ranked page with its rank score
+    in the `rank_col` column (`score` by default; a base column of that
+    name is replaced by it, so a caller that needs a stored `score`
+    names the rank column apart).
 
     search_field '' routes to the god field (table.go:997-1000).
     max_doc is the table's NextDocId (pass row-count for dense ids).
@@ -347,24 +351,25 @@ def search(
         top_k, offset, size, keep_total,
     )
     # Q10: hydrate ONLY the ranked page (broadcast), in the column order
-    # doc_id, base columns, [_total,] score; a base column named `score`
-    # is replaced IN PLACE by the rank score.
+    # doc_id, base columns, [_total,] rank_col; a base column named
+    # rank_col is replaced IN PLACE by the rank score.
     base_cols = [c for c in based.columns if c != "doc_id"]
     page_r = page.withColumnRenamed("score", "__rank_score")
     out = based.join(F.broadcast(page_r), "doc_id")
     cols = [F.col("doc_id")]
     for c in base_cols:
         cols.append(
-            F.col("__rank_score").alias("score") if c == "score" else based[c]
+            F.col("__rank_score").alias(rank_col) if c == rank_col
+            else based[c]
         )
     if keep_total:
         cols.append(page_r["_total"])
-    if "score" not in base_cols:
-        cols.append(F.col("__rank_score").alias("score"))
+    if rank_col not in base_cols:
+        cols.append(F.col("__rank_score").alias(rank_col))
     # the hydration join loses the page's rank order — restore it
     return (
         out.select(*cols)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .orderBy(F.desc(rank_col), F.asc("doc_id"))
         .limit(top_k)
     )
 

@@ -14,6 +14,8 @@
   a no-op: it pins no blocks.
 - scope() releases every pin still held when it exits. It yields the
   list of frames it holds.
+- occupancy(spark) reports what the session holds: the persisted-RDD
+  count and the bytes of their blocks (the REST `/_status` route).
 
 Who releases: an operator that materializes its own pins (a k-means
 fit, a streaming batch handler) opens its own scope. An operator that
@@ -61,6 +63,18 @@ def release(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
     else:
         df.unpersist()
+
+
+def occupancy(spark) -> dict[str, int]:
+    """The session's cache occupancy: how many RDDs are persisted, and
+    the bytes their blocks hold in memory plus on disk."""
+    jsc = spark.sparkContext._jsc
+    return {
+        "persisted_rdds": len(jsc.getPersistentRDDs()),
+        "storage_bytes": sum(
+            i.memSize() + i.diskSize() for i in jsc.sc().getRDDStorageInfo()
+        ),
+    }
 
 
 @contextmanager

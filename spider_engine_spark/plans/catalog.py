@@ -40,6 +40,7 @@ from spider_engine_spark.operators.postings import (
     TERM_BUCKETS,
     build_postings,
     merge_postings,
+    python_tokens_law,
     term_bucket_expr,
     with_term_bucket,
 )
@@ -258,6 +259,15 @@ class Table:
         that pruned base rows or dropped postings WITHOUT touching
         __deletes would silently skew those scores.
 
+        One driver action reads the batch facts off the pinned `ranged`
+        rows: per partition, the row count (the docId offsets), the
+        burned count, and whether python_tokens_law holds for any row.
+        The postings build plans the Python tokenizer fallback only when
+        it does. `ranged` holds every row that reaches the postings
+        build (the live rows are `ranged` minus the burned ones), so the
+        flag can over-include — a burned CJK row still plans the
+        fallback — but never misses a row that needs it.
+
         The two localCheckpoints below live in this call's own
         pins.scope(), released once the three writes are done.
         """
@@ -333,15 +343,30 @@ class Table:
         ranged = pin(
             typed.withColumn("_pid", F.spark_partition_id()), snapshot=True
         )
-        counts = {
-            r["_pid"]: r["cnt"]
-            for r in ranged.groupBy("_pid")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+        # burned rows: numeric/time sentinel from an unparseable input
+        burn_cond = F.lit(False)
+        for f, t in self.fields.items():
+            if t in ("number", "time"):
+                burn_cond = burn_cond | (
+                    F.col(f).bitwiseAND(F.lit(MAX_INT64)) == F.lit(MAX_INT64)
+                )
+        indexed = self._indexed_fields()
+        # the batch facts, in one driver action: rows and burned rows
+        # per partition, and whether any row needs the Python tokenizer
+        facts = (
+            ranged.groupBy("_pid")
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.count_if(burn_cond).alias("burned"),
+                F.bool_or(python_tokens_law(indexed)).alias("python"),
+            )
             .collect()
-        }
+        )
+        counts = {r["_pid"]: r["cnt"] for r in facts}
         n = sum(counts.values())
         if n == 0:  # fully-rejected batch: nothing to commit (a 0-row
             return 0, 0  # partitioned write would leave a schema-less dir)
+        n_burned = sum(r["burned"] for r in facts)
         offsets, acc = {}, 0
         for pid in sorted(counts):
             offsets[pid] = acc
@@ -364,22 +389,17 @@ class Table:
             eager=False,
         )
 
-        # burned rows: numeric/time sentinel from an unparseable input
-        burn_cond = F.lit(False)
-        for f, t in self.fields.items():
-            if t in ("number", "time"):
-                burn_cond = burn_cond | (
-                    F.col(f).bitwiseAND(F.lit(MAX_INT64)) == F.lit(MAX_INT64)
-                )
         burned = batch.filter(burn_cond).select("doc_id")
-        n_burned = burned.count()
 
         self.io.write(f"{self.name}__base", batch, mode="append")
         if n_burned:
             self.io.write(f"{self.name}__deletes", burned, mode="append")
         live = batch.join(burned, "doc_id", "left_anti")
         postings = with_term_bucket(
-            build_postings(live, "doc_id", self._indexed_fields()),
+            build_postings(
+                live, "doc_id", indexed,
+                python=any(r["python"] for r in facts),
+            ),
             n=self.term_buckets,
         )
         # co-locate each term_bucket before the hive-partitioned write:
@@ -464,13 +484,15 @@ class Table:
         size: int = 0,
         keep_total: bool = False,
         mode: str = "or",
+        rank_col: str = "score",
     ) -> DataFrame:
         """Single-term search (keyword: str, reference-exact), or
         multi-term (keyword: list[str]) through the same operator with
         the same filters + pagination — the query-LIST surface the
         reference's request model declared but never shipped
         (search/search.go:263-320). mode applies to the list form only:
-        'or' (scored union) or 'and' (intersection)."""
+        'or' (scored union) or 'and' (intersection). rank_col names the
+        rank-score column (search_op)."""
         self.check_filters(list(filters or []))
         numeric = {
             f for f, t in self.fields.items() if t in ("number", "time")
@@ -499,6 +521,7 @@ class Table:
             numeric_fields=numeric,
             term_buckets=self.term_buckets,
             keep_total=keep_total,
+            rank_col=rank_col,
         )
 
     # -- S6 schema evolution ------------------------------------------------

@@ -49,4 +49,16 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    # Search runs two windows over one partition on purpose: the df
+    # count(1) over () and the rank window over the page's top_k rows
+    # (whose partitionBy(lit(1)) the optimizer drops). WindowExec warns
+    # "No Partition Defined for Window operation!" for them on every
+    # search, which floods a long-lived controller's log. Only that
+    # logger is raised to ERROR; every other logger keeps its level.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
+    return spark

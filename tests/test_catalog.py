@@ -600,3 +600,137 @@ def test_search_is_one_lazy_plan(cat, spark):
         plan = frame._jdf.queryExecution().executedPlan().toString().lower()
         assert "rangepartitioning" not in plan, plan
         assert "inmemorytablescan" not in plan, plan
+
+
+def _postings_of(t) -> dict[tuple[str, str], list[tuple[int, int]]]:
+    return {
+        (r["field"], r["term"]): [
+            (p["doc_id"], p["weight"]) for p in r["postings"]
+        ]
+        for r in t.postings().collect()
+    }
+
+
+def _python_postings(t, rows) -> dict[tuple[str, str], list[tuple[int, int]]]:
+    """The pure-Python tokenize() oracle of a table's postings: every
+    indexed field, plus the god field over their '。'-joined values."""
+    from spider_engine_spark.functions.tokenizers import tokenize
+    from spider_engine_spark.operators.postings import GOD_FIELD, GOD_JOIN
+
+    ids = {r[t.pk]: r["doc_id"] for r in t.base().collect()}
+    fields = t._indexed_fields()
+    want: dict[tuple[str, str], list[tuple[int, int]]] = {}
+    for row in rows:
+        values = {f: row.get(f) for f in fields}
+        god = GOD_JOIN.join(values[f] or "" for f in fields)
+        for f, mode, value in [
+            *((f, m, values[f]) for f, m in fields.items()),
+            (GOD_FIELD, "words", god),
+        ]:
+            if value is None:
+                continue
+            for term, weight in tokenize(value, mode):
+                want.setdefault((f, term), []).append((ids[row[t.pk]], weight))
+    return {k: sorted(v) for k, v in want.items()}
+
+
+def test_degenerate_ingest_values_match_python_tokenizer(cat):
+    """One batch with a NULL words value, an empty string, an oversize
+    printable-ASCII value (past the native gate's 4096 chars) and a CJK
+    value gives the pure-Python tokenizer's postings, as does the
+    all-ASCII batch before it (which plans no Python fallback)."""
+    t = cat.create_table(
+        "db1", "degenerate", {"k": "primary", "text": "words"}
+    )
+    ascii_rows = [
+        {"k": "a1", "text": "alpha beta alpha"},
+        {"k": "a2", "text": "beta, gamma; delta!"},
+    ]
+    assert t.add_docs(ascii_rows) == (2, 0)
+    assert _postings_of(t) == _python_postings(t, ascii_rows)
+    oversize = " ".join(f"w{i % 37}" for i in range(1500))
+    assert len(oversize) > 4096 and oversize.isascii()
+    mixed = [
+        {"k": "m_null", "text": None},
+        {"k": "m_empty", "text": ""},
+        {"k": "m_oversize", "text": oversize},
+        {"k": "m_cjk", "text": "喜欢美食, 天安门 alpha"},
+        {"k": "m_ascii", "text": "gamma gamma delta"},
+    ]
+    assert t.add_docs(mixed) == (5, 0)
+    assert _postings_of(t) == _python_postings(t, ascii_rows + mixed)
+
+
+SERVE_FIELDS = {
+    "key": "primary", "text": "words", "lang": "whole", "source": "whole",
+    "n_chars": "number",
+}
+
+
+def _in_job_group(spark, fn) -> tuple[int, int]:
+    """Run fn under a fresh job group: (jobs run, plan nodes in the
+    group's SQL executions that evaluate Python — any node that carries
+    a "data sent to Python workers" metric)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"add-plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "add plan")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    python_nodes = 0
+    it = store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if not any(e.jobs().contains(j) for j in jobs):
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes().iterator()
+        while nodes.hasNext():
+            metrics = nodes.next().metrics().iterator()
+            while metrics.hasNext():
+                if metrics.next().name() == "data sent to Python workers":
+                    python_nodes += 1
+    return len(jobs), python_nodes
+
+
+def test_ascii_add_plans_no_python_tokenizer(cat, spark):
+    """On a serve-shaped table an all-ASCII one-row add runs no Python
+    node and at most 12 jobs; a CJK add still plans the pandas-UDF
+    fallback and indexes exactly like the Python tokenizer."""
+    t = cat.create_table("db1", "serve_shape", SERVE_FIELDS)
+    seed = [
+        {"key": f"s{i}", "text": f"spark search {i} index", "lang": "en",
+         "source": "web", "n_chars": 20 + i}
+        for i in range(20)
+    ]
+    t.add_docs(seed)
+    row = {"key": "ascii", "text": "one more ascii row", "lang": "en",
+           "source": "web", "n_chars": 18}
+    jobs, python_nodes = _in_job_group(spark, lambda: t.add_docs([row]))
+    assert python_nodes == 0
+    assert jobs <= 12, jobs
+    cjk = {"key": "cjk", "text": "喜欢美食 spark", "lang": "zh",
+           "source": "web", "n_chars": 8}
+    _, python_nodes = _in_job_group(spark, lambda: t.add_docs([cjk]))
+    assert python_nodes > 0
+    assert _postings_of(t) == _python_postings(t, seed + [row, cjk])
+
+
+def test_window_warning_logger_is_quiet(cat, spark):
+    """Search's single-partition windows would log a WindowExec WARN on
+    every call; the session raises only that logger to ERROR."""
+    t = cat.create_table("db1", "quietlog", {"k": "primary", "body": "words"})
+    t.add_docs([{"k": "1", "body": "red fox"}, {"k": "2", "body": "red dog"}])
+    assert len(t.search("red", field="body").collect()) == 2
+    logs = spark.sparkContext._jvm.org.apache.logging.log4j.LogManager
+    window = logs.getLogger("org.apache.spark.sql.execution.window.WindowExec")
+    assert window.getLevel().toString() == "ERROR"
+    assert not window.isWarnEnabled()
+    sibling = logs.getLogger("org.apache.spark.sql.execution.window")
+    root = logs.getRootLogger()
+    assert sibling.getLevel().toString() == root.getLevel().toString()

@@ -126,6 +126,21 @@ def test_rest_full_lifecycle(api):
     assert st["code"] == 0
     assert st["data"]["n_databases"] >= 1
     assert st["data"]["databases"]["db1"]["tables"]["user"]["real_doc_num"] == 2
+    # ... plus the session's cache occupancy, which requests do not grow
+    cache = st["data"]["cache"]
+    assert set(cache) == {"persisted_rdds", "storage_bytes"}
+    assert cache["persisted_rdds"] >= 0 and cache["storage_bytes"] >= 0
+    for i in range(10):
+        body = {"database": "db1", "table": "user", "value": "美食"}
+        if i % 2:
+            body["value"] = ["美食", "养生"]
+        assert api("POST", "/_search", body)["code"] == 0
+    for key in ("10006", "10007"):
+        body = {"user_name": "x", "user_age": 40, "user_desc": "喜欢美食",
+                "score": 1}
+        assert api("POST", f"/db1/user/{key}", body)["code"] == 0
+    after = api("GET", "/_status")["data"]["cache"]
+    assert after["persisted_rdds"] <= cache["persisted_rdds"], (cache, after)
 
     # auto-PK table: AddDoc must return the ASSIGNED key (table.go:446)
     assert api("POST", "/db1/nopk", [{"name": "body", "type": "words"}])["code"] == 0
@@ -238,8 +253,9 @@ def test_search_for_absent_term_is_empty(api):
 
 def test_search_on_table_with_score_field(api):
     """A user field named `score` does not collide with the rank score:
-    single-term, OR and AND searches all answer with the right keys and
-    totals."""
+    single-term, OR and AND searches all answer with the right keys,
+    rank order and totals, and each hit's Detail carries the stored
+    `score`, as get_doc does."""
     assert api("POST", "/sdb")["code"] == 0
     fields = [
         {"name": "k", "type": "primary"},
@@ -263,11 +279,16 @@ def test_search_on_table_with_score_field(api):
             },
         )
         assert r["code"] == 0, r
-        return {d["Key"] for d in r["data"]["docs"]}, r["data"]["total"]
+        hits = [(d["Key"], d["Detail"]["score"]) for d in r["data"]["docs"]]
+        return hits, r["data"]["total"]
 
-    assert search("alpha") == ({"1", "2"}, 2)
-    assert search(["alpha", "beta"]) == ({"1", "2", "3"}, 3)
-    assert search(["alpha", "beta"], "and") == ({"1"}, 1)
+    assert api("GET", "/sdb/t/1")["data"]["Detail"]["score"] == 5
+    # rank: "alpha" weighs 10000 in doc 2 and 5000 in doc 1; OR sums
+    # per-term TF-IDF (doc 1: 88 + 88, doc 2: 176, doc 3: 88; ties by
+    # doc_id)
+    assert search("alpha") == ([("2", 7), ("1", 5)], 2)
+    assert search(["alpha", "beta"]) == ([("1", 5), ("2", 7), ("3", 9)], 3)
+    assert search(["alpha", "beta"], "and") == ([("1", 5)], 1)
     assert api("DELETE", "/sdb")["code"] == 0
 
 
