@@ -42,7 +42,6 @@ def migration_ignored_flags(args: argparse.Namespace) -> list[str]:
             ("--hosts", args.hosts),
             ("--words", args.words),
             ("--vocab", args.vocab),
-            ("--host-cache", args.host_cache or None),
             ("--no-flush", args.no_flush or None),
             ("--no-index", args.no_index or None),
             ("--seeds", args.seeds if args.seeds != DEFAULT_SEEDS else None),
@@ -80,8 +79,6 @@ def main() -> None:
     ap.add_argument("--migrate-capacity", type=int, default=None,
                     help="with/instead of --migrate-shards: rebuild with "
                     "this cuckoo capacity per shard")
-    ap.add_argument("--host-cache", action="store_true",
-                    help="broadcast-join a persisted host-attr table in enrich (for externally-sourced attrs; the synthetic attrs are cheaper recomputed)")
     ap.add_argument("--hosts", type=int, default=None, help="web size (WebConfig.num_hosts)")
     ap.add_argument("--words", type=int, default=None, help="words per text span (WebConfig.words_per_span)")
     ap.add_argument("--vocab", type=int, default=None, help="vocabulary size (WebConfig.vocab_size)")
@@ -155,7 +152,6 @@ def main() -> None:
         capacity_per_shard=args.capacity,
         salts=args.salts,
         index=not args.no_index,
-        host_cache=args.host_cache,
         cfg=cfg,
         checkpoint_every=args.checkpoint_every,
     )

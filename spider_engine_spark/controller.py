@@ -176,7 +176,13 @@ class SpiderController:
                 # primary key, table.go:446)
                 key = _uuid.uuid4().hex
             row[t.pk] = key
-            accepted, _burned = t.add_docs([row])
+            accepted, burned = t.add_docs([row])
+        if burned:
+            # the row is stored but tombstoned: its docId is burned (M3)
+            return error(
+                "add failed: a number/time field is missing or "
+                "unparseable (the docId is burned)"
+            )
         if accepted == 0:
             return error("add failed (duplicate primary key?)")
         return ok(key)

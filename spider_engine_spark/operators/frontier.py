@@ -148,9 +148,7 @@ def host_attr_cols(cfg: wm.WebConfig, host=None):
 
 
 def enrich_candidates(
-    raw: DataFrame,
-    cfg: wm.WebConfig = wm.DEFAULT,
-    host_attrs: DataFrame | None = None,
+    raw: DataFrame, cfg: wm.WebConfig = wm.DEFAULT
 ) -> DataFrame:
     """raw(url_raw, depth) -> canonical candidates with host attributes.
 
@@ -159,15 +157,9 @@ def enrich_candidates(
     over the multi-billion-row outlink stream) — enrich contains ZERO
     Python. webmodel stays the single source of truth shared with the
     replay simulator (the md5-based attr law is bit-identical on both
-    sides, see host_attr_cols).
-
-    host_attrs: optional (host, priority, budget) table of already-
-    computed attributes. Known hosts take their attrs from a broadcast
-    join and only never-seen hosts evaluate the attr expressions. Off by
-    default (CrawlJob(host_cache=True)): the synthetic attrs are pure
-    JVM functions of the host string and recomputing them measures
-    cheaper than the join machinery; the hook exists for attrs sourced
-    from external state (fetched robots.txt rules).
+    sides, see host_attr_cols). The attrs are recomputed per row: they
+    are pure functions of the host string, and a broadcast-joined
+    host-attr table measured slower (BENCH/BASELINE.md §4).
 
     Plan shape: the canonicalizer runs as a LADDER of narrow
     projections (each intermediate — stripped input, scheme, rest,
@@ -234,28 +226,15 @@ def enrich_candidates(
         # Python robots_allowed (and the replay simulator) uses
         (~F.col("_path").startswith(wm.ROBOTS_DISALLOW_PREFIX)).alias("allowed"),
     )
-
-    def _with_attrs(df: DataFrame) -> DataFrame:
-        priority, budget = host_attr_cols(cfg)
-        return df.select(
-            "url",
-            "host",
-            "depth",
-            priority.alias("priority"),
-            budget.alias("budget"),
-            "allowed",
-        )
-
-    if host_attrs is None:
-        return _with_attrs(tagged)
-    known = F.broadcast(
-        host_attrs.select("host", "priority", "budget")
+    priority, budget = host_attr_cols(cfg)
+    return tagged.select(
+        "url",
+        "host",
+        "depth",
+        priority.alias("priority"),
+        budget.alias("budget"),
+        "allowed",
     )
-    hit = tagged.join(known, "host").select(
-        "url", "host", "depth", "priority", "budget", "allowed"
-    )
-    miss = tagged.join(known, "host", "left_anti")
-    return hit.unionByName(_with_attrs(miss))
 
 
 def fetch_docs(batch: DataFrame, step: int, cfg: wm.WebConfig = wm.DEFAULT) -> DataFrame:
@@ -390,16 +369,14 @@ class _Staged:
 #   dirty every step, so a size criterion would never fold them. Cost:
 #   one full-state write every compact_every steps, and the
 #   latest-per-shard read fans over <= compact_every dirs.
-# - seen, hosts and postings fold only the undersized snapshots
+# - seen and postings fold only the undersized snapshots
 #   (read-amplification control; large already-compacted dirs are reused
 #   untouched — the reference's pick-undersized-groups planner,
 #   table.go:874-971). Admitted sets are disjoint by construction, so a
-#   concat merge keeps seen distinct; hosts appends one tiny snapshot per
-#   step that a broadcast join reads every step.
+#   concat merge keeps seen distinct.
 _COMPACTION = {
     "filter": (1 << 60, seenset.latest_state),
     "seen": (64 << 20, None),
-    "hosts": (64 << 20, None),
     "postings": (64 << 20, merge_postings),
 }
 
@@ -422,6 +399,13 @@ class CrawlJob:
     a distributed-FS commit per superstep; a crash replays at most N-1
     steps from the last commit. Results are bit-identical in both modes
     (the replay tests run both).
+
+    State: five tables with one format each — frontier (the commit point;
+    its meta carries the step, the web physics, the attr law and the
+    seen-set layout num_shards/capacity_per_shard/layout_epoch), docs,
+    seen, filter (append-only step-tagged dirty-shard rows) and postings.
+    A resume restores the layout from the frontier meta and raises when
+    the meta lacks it.
     """
 
     def __init__(
@@ -436,9 +420,7 @@ class CrawlJob:
         cfg: wm.WebConfig | None = None,
         compact_every: int = 4,
         checkpoint_every: int = 1,
-        host_cache: bool = False,
     ):
-        self.host_cache = host_cache
         self.compact_every = compact_every
         self.checkpoint_every = checkpoint_every
         self.spark = spark
@@ -462,62 +444,44 @@ class CrawlJob:
             # stored layout.
             stored = meta.get("web_config")
             self.cfg = wm.WebConfig(**stored) if stored else (cfg or wm.DEFAULT)
-            self.num_shards, ns_known = self._restore_layout(
-                meta, "num_shards", num_shards, 8
+            self.num_shards = self._restore_layout(
+                meta, "num_shards", num_shards
             )
-            self.capacity, cap_known = self._restore_layout(
-                meta, "capacity_per_shard", capacity_per_shard, 1 << 16
+            self.capacity = self._restore_layout(
+                meta, "capacity_per_shard", capacity_per_shard
             )
-            # stamp the layout into future commits only when it came from
-            # the meta or an explicit argument — a guessed default on a
-            # pre-layout-stamp root must not get blessed as the bootstrap
-            # truth (it would make the later, historically-CORRECT
-            # explicit resume raise the conflict error)
-            self._stamp_layout = ns_known and cap_known
             # layout epoch: bumped by migrate_layout; tables written with
             # a HIGHER epoch than the committed frontier's are orphans of
             # a migration that never reached its commit point
             self.layout_epoch = int(meta.get("layout_epoch", 0))
-            # orphan writes from a crashed superstep must be reverted
-            # BEFORE the attr-law migration: _migrate_attr_law rewrites
-            # hosts reusing the latest hosts meta — if that meta belongs
-            # to an orphan append (step > frontier step), run_step's
-            # revert pass would later roll hosts back BEHIND the
-            # migration while the frontier meta already carries the new
-            # law tag, permanently mixing old- and new-law attrs.
             self._revert_orphans()
             if meta.get("attr_law") != wm.ATTR_LAW:
                 self._migrate_attr_law(meta)
         elif seeds is not None:
             self.cfg = cfg or wm.DEFAULT
             # at bootstrap the chosen values (explicit or default) DEFINE
-            # the layout — always stamped
+            # the layout
             self.num_shards = 8 if num_shards is None else int(num_shards)
             self.capacity = (
                 1 << 16 if capacity_per_shard is None else int(capacity_per_shard)
             )
-            self._stamp_layout = True
             self.layout_epoch = 0
             self._bootstrap(seeds)
         else:
             raise ValueError("new crawl root requires seeds")
 
     @staticmethod
-    def _restore_layout(
-        meta: dict, key: str, given: int | None, default: int
-    ) -> tuple[int, bool]:
-        """Resolve one layout parameter on resume.
-
-        Returns (value, known): known=True when the value came from the
-        stored meta or an explicit caller argument; False when it is the
-        constructor default guessed for a pre-layout-stamp root (such a
-        guess must never be stamped into the meta as bootstrap truth)."""
+    def _restore_layout(meta: dict, key: str, given: int | None) -> int:
+        """Resolve one layout parameter on resume: the value stored in
+        the frontier meta, which every frontier commit stamps. Raises
+        ValueError when the meta lacks the key (a root this code never
+        wrote) or when `given` conflicts with the stored value."""
         stored = meta.get(key)
         if stored is None:
-            # pre-layout-stamp root: trust the caller (legacy behavior)
-            if given is None:
-                return default, False
-            return int(given), True
+            raise ValueError(
+                f"crawl root frontier meta has no {key}: the seen-set "
+                "layout cannot be restored"
+            )
         if given is not None and int(given) != int(stored):
             raise ValueError(
                 f"crawl root was bootstrapped with {key}={int(stored)}; "
@@ -525,24 +489,18 @@ class CrawlJob:
                 "persisted seen-set (re-sharding requires a migration "
                 "job) — omit the argument to resume with the stored layout"
             )
-        return int(stored), True
+        return int(stored)
 
     def _layout_meta(self) -> dict:
         """Meta fields every frontier commit carries, so ANY resume point
-        (bootstrap or mid-crawl) restores the full layout + physics.
-
-        Layout keys are included only when they are KNOWN (bootstrap
-        choice, stored meta, or explicit resume argument) — a guessed
-        default on a legacy root is not blessed."""
-        out = {
+        (bootstrap or mid-crawl) restores the full layout + physics."""
+        return {
             "web_config": self.cfg.__dict__,
             "attr_law": wm.ATTR_LAW,
             "layout_epoch": self.layout_epoch,
+            "num_shards": self.num_shards,
+            "capacity_per_shard": self.capacity,
         }
-        if self._stamp_layout:
-            out["num_shards"] = self.num_shards
-            out["capacity_per_shard"] = self.capacity
-        return out
 
     @classmethod
     def migrate_layout(
@@ -599,19 +557,13 @@ class CrawlJob:
             if capacity_per_shard is None
             else int(capacity_per_shard)
         )
-        if (
-            job._stamp_layout
-            and (new_shards, new_cap) == (job.num_shards, job.capacity)
-        ):
-            return job  # layout already known and unchanged — no-op
-        # a pre-layout-stamp legacy root ALWAYS rebuilds: the resumed
-        # values are a guess, and the rebuild only needs (url, hash) —
-        # migration is also the repair path that makes the layout known.
-        # A capacity-only change on a stamped root keeps the stored shard
-        # column and skips the seen rewrite entirely (only the filters
-        # need rebuilding — rewriting 10^10 byte-identical seen rows
-        # would be pure write amplification).
-        reshard_seen = (not job._stamp_layout) or new_shards != job.num_shards
+        if (new_shards, new_cap) == (job.num_shards, job.capacity):
+            return job  # layout unchanged — no-op
+        # a capacity-only change keeps the stored shard column and skips
+        # the seen rewrite entirely (only the filters need rebuilding —
+        # rewriting 10^10 byte-identical seen rows would be pure write
+        # amplification)
+        reshard_seen = new_shards != job.num_shards
         if reshard_seen:
             reshard = (
                 job.io.read(spark, "seen")
@@ -698,7 +650,7 @@ class CrawlJob:
         at both the committed step AND the committed epoch."""
         step = self.step_no
         epoch = self.layout_epoch
-        for tbl in ("docs", "seen", "filter", "postings", "hosts"):
+        for tbl in ("docs", "seen", "filter", "postings"):
             if self.io.exists(tbl):
                 m = self.io.meta(tbl)
                 if (
@@ -736,10 +688,7 @@ class CrawlJob:
 
         The filter table is append-only dirty-shard rows tagged with
         `step`, resolved latest-per-shard here."""
-        df = self._get("filter")
-        if "step" in df.columns:
-            df = seenset.latest_state(df).drop("step")
-        return df
+        return seenset.latest_state(self._get("filter")).drop("step")
 
     def _put(
         self,
@@ -825,23 +774,13 @@ class CrawlJob:
         """Re-derive persisted priority/budget after an attribute-law
         change (webmodel.ATTR_LAW differs from the root's stored tag).
 
-        Frontier rows and the hosts cache STORE derived attrs; without
-        this, a resumed pre-change root would mix two laws for the same
-        host — inconsistent per-host budget cutoffs in select_fetch_batch
-        and divergence from the (all-current-law) replay simulator. Attrs
-        are pure functions of the host string, so migration is one
-        projection per table. Hosts first, frontier LAST: the frontier's
-        attr_law meta is the migration commit point, and re-deriving is a
-        fixpoint, so a crash between the two writes just re-runs both."""
+        Frontier rows STORE derived attrs; without this, a resumed
+        pre-change root would mix two laws for the same host — inconsistent
+        per-host budget cutoffs in select_fetch_batch and divergence from
+        the (all-current-law) replay simulator. Attrs are pure functions of
+        the host string, so migration is one projection, committed with
+        the new attr_law tag in the same frontier snapshot."""
         prio, budget = host_attr_cols(self.cfg)
-        if self.io.exists("hosts"):
-            hmeta = dict(self.io.meta("hosts"))
-            hosts = (
-                self.io.read(self.spark, "hosts")
-                .select("host", prio.alias("priority"), budget.alias("budget"))
-                .distinct()
-            )
-            self.io.write("hosts", hosts, meta=hmeta)
         fr = self.io.read(self.spark, "frontier").select(
             "url",
             "host",
@@ -876,15 +815,6 @@ class CrawlJob:
             meta={"step": 0, "layout_epoch": 0},
             partition_by=["shard"],
         )
-        if self.host_cache:
-            # host-attribute cache: deterministic (host, priority,
-            # budget) rows; later supersteps broadcast-join it so known
-            # hosts never re-enter Python (see enrich_candidates)
-            self.io.write(
-                "hosts",
-                cand.select("host", "priority", "budget").distinct(),
-                meta={"step": 0},
-            )
         state = seenset.insert(
             cand, seenset.empty_state(self.spark), self.capacity
         )
@@ -965,12 +895,7 @@ class CrawlJob:
         # local[32], 1.16M pages back-to-back: WITH 72.0k urls/s
         # (enrich 65.2s, probe 3.6s) / WITHOUT 44.1k (enrich 100.9s,
         # probe 11.3s). See BENCH/BASELINE.md §4.
-        hosts_df = None
-        if self.host_cache and ("hosts" in self._mem or self.io.exists("hosts")):
-            hosts_df = self._get("hosts")
-        enriched = pin(
-            enrich_candidates(raw_links, self.cfg, host_attrs=hosts_df)
-        )
+        enriched = pin(enrich_candidates(raw_links, self.cfg))
         # ONE action for robots counts + link counts + the candidate
         # count: n_cand == |distinct allowed urls| == the size of the
         # groupBy(url) below, so counting it here saves the separate
@@ -993,26 +918,6 @@ class CrawlJob:
         }
         allow_counts = {k: v[0] for k, v in allow_stats.items()}
         n_cand = allow_stats.get(True, (0, 0))[1]
-        if self.host_cache:
-            # grow the host-attr cache with this step's never-seen hosts
-            # (disjoint from the table by construction -> append keeps
-            # keys unique; a crash before the frontier commit is
-            # reverted by the orphan pass above)
-            if hosts_df is None:
-                new_hosts = enriched.select(
-                    "host", "priority", "budget"
-                ).distinct()
-            else:
-                new_hosts = (
-                    enriched.join(
-                        F.broadcast(hosts_df.select("host")),
-                        "host",
-                        "left_anti",
-                    )
-                    .select("host", "priority", "budget")
-                    .distinct()
-                )
-            self._put("hosts", new_hosts, {"step": step + 1}, append=True)
         mark("enrich")
         n_links = sum(allow_counts.values())
         n_robots_blocked = allow_counts.get(False, 0)

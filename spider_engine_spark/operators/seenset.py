@@ -4,16 +4,16 @@ Dataflow per superstep (all Arrow-vectorized, no per-row Python at the
 API surface):
 
   candidates --xxhash64--> shard = pmod(hash, P)
-      cogroup(shard) with filter-state table
-      -> maybe_seen flag per candidate            (probe_udf)
-  definitely-new  = maybe_seen == false           (no exact check needed —
+      (shard, hash) cogroup(shard) with filter-state table
+      -> maybe-seen (shard, hash) set             (probe_hashes)
+  definitely-new  = candidates MINUS maybe-seen   (no exact check needed —
                                                    cuckoo has no false
                                                    negatives)
   maybe-seen      = exact LEFT SEMI join vs seen table (small fraction =
                     FP rate + true dups)
   admitted        = definitely-new UNION (maybe-seen MINUS exact-seen)
       cogroup(shard) with filter-state table
-      -> new filter-state rows                    (insert_udf)
+      -> new filter-state rows                    (insert)
 
 The exact seen table is itself hash-partitioned parquet via TableIO; at
 10^10 URLs only the (tiny) maybe-seen fraction ever joins against it.
@@ -26,10 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -63,38 +61,6 @@ def with_shard(df: DataFrame, url_col: str, num_shards: int) -> DataFrame:
     """Native hash+shard: xxhash64 on the canonical URL (JVM-side)."""
     return df.withColumn("hash", F.xxhash64(F.col(url_col))).withColumn(
         "shard", shard_expr(F.col("hash"), num_shards)
-    )
-
-
-def probe(candidates: DataFrame, state: DataFrame) -> DataFrame:
-    """candidates(url, hash, shard, ...) -> + maybe_seen boolean."""
-    out_schema = StructType(
-        list(candidates.schema.fields)
-        + [StructField("maybe_seen", BooleanType(), False)]
-    )
-    cols = candidates.columns
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if right.empty:
-            left = left.copy()
-            left["maybe_seen"] = False
-            return left
-        if len(right) > 1:
-            raise ValueError(
-                "unresolved filter state: expected one row per shard — "
-                "resolve append-only state with latest_state() first"
-            )
-        filt = CuckooFilter.from_bytes(bytes(right["data"].iloc[0]))
-        left = left.copy()
-        left["maybe_seen"] = filt.contains(
-            left["hash"].to_numpy().astype("uint64")
-        )
-        return left
-
-    return candidates.groupBy("shard").cogroup(state.groupBy("shard")).applyInPandas(
-        fn, out_schema
     )
 
 
@@ -183,18 +149,12 @@ def latest_state(df: DataFrame) -> DataFrame:
     Safe on any SUBSET of snapshot dirs: the reduction only drops rows
     superseded *within* the subset, so compaction can fold filter dirs
     with this as the transform and the global latest-per-shard over
-    (compacted + newer dirs) is unchanged.
-
-    Legacy rows from pre-step-column snapshots surface as step=null after
-    a union with allowMissingColumns; max_by IGNORES null order keys, so
-    the key is coalesced to -1 — a legacy row loses to any tagged row but
-    never resolves to an all-null state."""
-    picked = (
+    (compacted + newer dirs) is unchanged."""
+    return (
         df.groupBy("shard")
         .agg(
             F.max_by(
-                F.struct("nbuckets", "count", "data", "step"),
-                F.coalesce(F.col("step"), F.lit(-1)),
+                F.struct("nbuckets", "count", "data", "step"), "step"
             ).alias("s")
         )
         .select(
@@ -205,16 +165,15 @@ def latest_state(df: DataFrame) -> DataFrame:
             F.col("s.step").alias("step"),
         )
     )
-    return picked
 
 
 def probe_hashes(keys: DataFrame, state: DataFrame) -> DataFrame:
     """Minimal-traffic probe: keys(shard, hash) -> maybe-seen (shard, hash).
 
-    Only 16 bytes/candidate cross the Arrow boundary (the full-row
-    `probe` round-trips every candidate column; at millions of
-    candidates that dominates the stage). The caller splits candidates
-    with a join against the (tiny) maybe-set — AQE broadcasts it."""
+    Only 16 bytes/candidate cross the Arrow boundary (a full-row probe
+    would round-trip every candidate column; at millions of candidates
+    that dominates the stage). The caller splits candidates with a join
+    against the (tiny) maybe-set — AQE broadcasts it."""
 
     def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:

@@ -163,6 +163,30 @@ def test_rest_full_lifecycle(api):
         pass
 
 
+def test_add_with_burned_doc_id_reports_the_burn(api):
+    """An add whose number field is omitted is stored with the MaxInt64
+    sentinel and tombstoned at once: its docId is burned (SURVEY M3).
+    The reply names the burn, a true duplicate key keeps the duplicate
+    reply, and the burned key is not found."""
+    assert api("POST", "/bdb")["code"] == 0
+    fields = [
+        {"name": "k", "type": "primary"},
+        {"name": "text", "type": "words"},
+        {"name": "n", "type": "number"},
+    ]
+    assert api("POST", "/bdb/t", fields)["code"] == 0
+    assert api("POST", "/bdb/t/1", {"text": "alpha", "n": 3})["code"] == 0
+
+    r = api("POST", "/bdb/t/2", {"text": "beta"})
+    assert r["code"] == 2 and "burned" in r["data"], r
+    assert "duplicate" not in r["data"], r
+    r = api("POST", "/bdb/t/1", {"text": "gamma", "n": 4})
+    assert r["code"] == 2 and "duplicate" in r["data"], r
+    assert api("GET", "/bdb/t/2")["code"] == 2
+    assert api("GET", "/bdb/t/1")["data"]["Detail"]["text"] == "alpha"
+    assert api("DELETE", "/bdb")["code"] == 0
+
+
 def test_filter_value_dispatch_by_field_type(api):
     """str-vs-int filter values dispatch on the field's DECLARED type
     (reference behavior), so an empty-string probe on a string field is

@@ -95,7 +95,7 @@ def test_resume_after_crash_at_every_commit_boundary(
 def test_memory_mode_crash_mid_checkpoint(
     spark, tmp_path_factory, crash_after
 ):
-    """checkpoint_every>1: a crash in the middle of _checkpoint (after
+    """checkpoint_every>1: a crash in the middle of flush() (after
     `crash_after` of its table writes) must leave a resumable state —
     the frontier snapshot is written LAST, so resume reverts any table
     ahead of it and replays the steps since the previous checkpoint,
@@ -277,100 +277,3 @@ def test_streaming_compaction_is_incremental_reuses_large_dirs(
     versions_before = len(io._load_manifest("postings")["versions"])
     handler2(batch_df(3), 3)
     assert len(io._load_manifest("postings")["versions"]) == versions_before
-
-
-def _assert_unique_hosts(job):
-    import pyspark.sql.functions as F
-
-    hosts = job.io.read(job.spark, "hosts")
-    dup = (
-        hosts.groupBy("host").count().filter(F.col("count") > 1).count()
-    )
-    assert dup == 0, "hosts table has duplicate host keys after recovery"
-
-
-def test_host_cache_replay_equality(spark, tmp_path_factory):
-    """Round-3 advice: the host_cache=True path (bootstrap hosts write,
-    per-step disjoint append, compaction) must replay bit-equal with the
-    simulator and keep host keys unique."""
-    root = str(tmp_path_factory.mktemp("hostcache"))
-    job = CrawlJob(
-        spark, root, seeds=SEEDS, num_shards=2, salts=2,
-        host_cache=True, index=False, compact_every=2,
-    )
-    job.run(3)
-    sim = ReplaySimulator(SEEDS)
-    sim.run(3)
-    assert fetched_urls_by_step(job) == sim.fetched_by_step
-    assert seen_urls(job) == sim.seen
-    _assert_unique_hosts(job)
-
-
-@pytest.mark.parametrize("crash_after", [0, 1, 2, 3, 4])
-def test_host_cache_crash_at_every_commit_boundary(
-    spark, tmp_path_factory, crash_after
-):
-    """host_cache=True adds a hosts append before the frontier commit;
-    a crash at ANY boundary (including after the hosts append but before
-    the frontier commit — the orphan-hosts revert) must resume
-    exactly-once with unique host keys."""
-    root = str(tmp_path_factory.mktemp(f"hostcrash{crash_after}"))
-    job = CrawlJob(
-        spark, root, seeds=SEEDS, num_shards=2, salts=2,
-        host_cache=True, index=False,
-    )
-    # docs, hosts, seen, filter, frontier
-    assert _writes_of_one_step(job) == 5
-    crashed = False
-    with _CrashAt(job.io, crash_after):
-        try:
-            job.run_step()
-        except RuntimeError:
-            crashed = True
-    assert crashed, "crash point beyond the step's commit count"
-
-    job2 = CrawlJob(
-        spark, root, num_shards=2, salts=2, host_cache=True, index=False
-    )
-    assert job2.step_no == 1  # step 2 never committed
-    job2.run(2)
-    sim = ReplaySimulator(SEEDS)
-    sim.run(3)
-    assert fetched_urls_by_step(job2) == sim.fetched_by_step
-    assert seen_urls(job2) == sim.seen
-    _assert_unique_hosts(job2)
-
-
-@pytest.mark.parametrize("crash_after", [0, 1, 2, 3, 4])
-def test_host_cache_memory_mode_crash_mid_checkpoint(
-    spark, tmp_path_factory, crash_after
-):
-    """Memory mode + host_cache: hosts lives in _mem between checkpoints
-    (_put(append=True)); a crash during the checkpoint flush must revert
-    or drop the orphan hosts snapshot (latest_version_at_step /
-    drop-on-first-checkpoint) and replay to simulator parity."""
-    root = str(tmp_path_factory.mktemp(f"hostmemcrash{crash_after}"))
-    job = CrawlJob(
-        spark, root, seeds=SEEDS, num_shards=2, salts=2,
-        checkpoint_every=2, host_cache=True, index=False,
-    )
-    job.run_step()
-    crashed = False
-    with _CrashAt(job.io, crash_after):
-        try:
-            job.run_step()
-        except RuntimeError:
-            crashed = True
-    assert crashed
-
-    job2 = CrawlJob(
-        spark, root, num_shards=2, salts=2, checkpoint_every=2,
-        host_cache=True, index=False,
-    )
-    assert job2.step_no == 0
-    job2.run(3)
-    sim = ReplaySimulator(SEEDS)
-    sim.run(3)
-    assert fetched_urls_by_step(job2) == sim.fetched_by_step
-    assert seen_urls(job2) == sim.seen
-    _assert_unique_hosts(job2)

@@ -89,19 +89,23 @@ def test_span_sequence_invariant(crawl):
         assert got == want
 
 
+def _false_negatives(seen, state) -> int:
+    """Seen (shard, hash) keys the filter state does NOT report as
+    maybe-seen through probe_hashes, the superstep's probe."""
+    keys = seen.select("shard", "hash")
+    maybe = seenset.probe_hashes(keys, state)
+    return keys.join(maybe, ["shard", "hash"], "left_anti").count()
+
+
 def test_no_cuckoo_false_negatives(crawl):
     """Every admitted URL must be maybe-seen on a later probe — i.e. the
     filter state actually contains the seen set (no false negatives)."""
     job, _, _, _ = crawl
-    from spider_engine_spark.operators import seenset
-
-    spark = job.spark
-    seen = job.io.read(spark, "seen").select("url", "hash", "shard")
+    seen = job.io.read(job.spark, "seen")
+    assert seen.count() > 0
     # the durable filter table is append-only dirty-shard rows; the
     # supported read path resolves latest-per-shard
-    state = job._filter_state()
-    probed = seenset.probe(seen, state)
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
+    assert _false_negatives(seen, job._filter_state()) == 0
 
 
 def test_postings_graft_indexed(crawl):
@@ -271,45 +275,15 @@ def test_filter_writes_only_dirty_shards(spark, tmp_path_factory):
     assert total_rows == len(before)
 
 
-def test_latest_state_keeps_legacy_stepless_rows(spark):
-    """Resuming a crawl root written before the dirty-shard change: the
-    old filter snapshot has no step column; after the first new-format
-    append the union surfaces it as step=null. max_by ignores null order
-    keys, so latest_state coalesces — a legacy-only shard must resolve to
-    its real bytes, never an all-null row."""
-    from spider_engine_spark.operators import seenset
-    from spider_engine_spark.operators.cuckoo import CuckooFilter
-
-    legacy = CuckooFilter(1 << 8)
-    legacy.insert(__import__("numpy").array([7], dtype="uint64"))
-    newer = CuckooFilter(1 << 8)
-    rows = [
-        # shard 0: legacy row only (step=null after the union)
-        (0, legacy.nbuckets, 1, bytearray(legacy.to_bytes()), None),
-        # shard 1: legacy + a tagged newer row — newer must win
-        (1, legacy.nbuckets, 1, bytearray(legacy.to_bytes()), None),
-        (1, newer.nbuckets, 5, bytearray(newer.to_bytes()), 3),
-    ]
-    df = spark.createDataFrame(
-        rows, "shard int, nbuckets int, count long, data binary, step int"
-    )
-    got = {r["shard"]: r for r in seenset.latest_state(df).collect()}
-    assert bytes(got[0]["data"]) == legacy.to_bytes()  # not null
-    assert got[0]["count"] == 1
-    assert bytes(got[1]["data"]) == newer.to_bytes()  # tagged wins
-    assert got[1]["count"] == 5
-
-
 def test_attr_law_migration_on_resume(spark, tmp_path_factory):
     """A crawl root persisted under an older attribute law must not mix
-    laws on resume: CrawlJob re-derives frontier (and hosts) priority/
-    budget when the stored attr_law tag differs, and the continued crawl
+    laws on resume: CrawlJob re-derives the frontier's priority/budget
+    when the stored attr_law tag differs, and the continued crawl
     matches the all-current-law simulator."""
     seeds = wm.seed_urls(8)
     root = str(tmp_path_factory.mktemp("lawmig"))
     job = CrawlJob(
-        spark, root, seeds=seeds, num_shards=2, salts=2, index=False,
-        host_cache=True,
+        spark, root, seeds=seeds, num_shards=2, salts=2, index=False
     )
     job.run(1)
 
@@ -325,23 +299,11 @@ def test_attr_law_migration_on_resume(spark, tmp_path_factory):
         "discovered_step",
     )
     io.write("frontier", wrong, meta=fmeta)
-    hmeta = dict(io.meta("hosts"))
-    wrong_hosts = io.read(spark, "hosts").select(
-        "host",
-        (F.col("priority") + 1).alias("priority"),
-        (F.col("budget") + 7).alias("budget"),
-    )
-    io.write("hosts", wrong_hosts, meta=hmeta)
 
     # resume: migration must re-derive every stored attr from the host
-    job2 = CrawlJob(
-        spark, root, num_shards=2, salts=2, index=False, host_cache=True
-    )
+    job2 = CrawlJob(spark, root, num_shards=2, salts=2, index=False)
     assert io.meta("frontier").get("attr_law") == wm.ATTR_LAW
     for r in io.read(spark, "frontier").collect():
-        assert r["priority"] == wm.host_priority(r["host"])
-        assert r["budget"] == wm.host_budget(r["host"], job2.cfg)
-    for r in io.read(spark, "hosts").collect():
         assert r["priority"] == wm.host_priority(r["host"])
         assert r["budget"] == wm.host_budget(r["host"], job2.cfg)
 
@@ -410,70 +372,6 @@ def test_resume_rejects_conflicting_layout(spark, tmp_path_factory):
     assert job.num_shards == 4 and job.capacity == 1 << 12
 
 
-def test_orphan_hosts_revert_precedes_attr_law_migration(spark, tmp_path_factory):
-    """ADVICE r4 (medium): a pre-law-change root that crashed mid-superstep
-    leaving an ORPHAN hosts append (meta step > frontier step) must not
-    let the revert pass step BEHIND the migration. CrawlJob now reverts
-    orphans in __init__ before _migrate_attr_law, so the migrated hosts
-    snapshot is the authoritative one and no old-law attrs survive."""
-    seeds = wm.seed_urls(8)
-    root = str(tmp_path_factory.mktemp("orphanlaw"))
-    job = CrawlJob(
-        spark, root, seeds=seeds, num_shards=2, salts=2, index=False,
-        host_cache=True,
-    )
-    job.run(1)
-    io = job.io
-
-    # simulate an old-law root: corrupt the derived attrs everywhere and
-    # strip the law tag from the frontier commit
-    fmeta = dict(io.meta("frontier"))
-    fmeta.pop("attr_law")
-    wrong_frontier = io.read(spark, "frontier").select(
-        "url", "host", "depth",
-        (F.col("priority") + 1).alias("priority"),
-        (F.col("budget") + 7).alias("budget"),
-        "discovered_step",
-    )
-    io.write("frontier", wrong_frontier, meta=fmeta)
-    corrupt_hosts = io.read(spark, "hosts").select(
-        "host",
-        (F.col("priority") + 1).alias("priority"),
-        (F.col("budget") + 7).alias("budget"),
-    )
-    io.write("hosts", corrupt_hosts, meta=dict(io.meta("hosts")))
-    # ...and a crash mid-step-2: an orphan hosts append whose meta step
-    # (2) is ahead of the committed frontier step (1)
-    io.write(
-        "hosts",
-        corrupt_hosts.limit(1),
-        mode="append",
-        meta={"step": 2},
-    )
-
-    job2 = CrawlJob(
-        spark, root, num_shards=2, salts=2, index=False, host_cache=True
-    )
-    # the orphan was reverted BEFORE migration: hosts meta is back at the
-    # committed step and carries only current-law attrs
-    assert int(io.meta("hosts").get("step", 0)) <= 1
-    assert io.meta("frontier").get("attr_law") == wm.ATTR_LAW
-    for r in io.read(spark, "hosts").collect():
-        assert r["priority"] == wm.host_priority(r["host"])
-        assert r["budget"] == wm.host_budget(r["host"], job2.cfg)
-
-    # the continued crawl (which re-runs step 2 idempotently) replays
-    # exactly — no old-law attrs leaked through the broadcast-join path
-    job2.run(2)
-    sim = ReplaySimulator(seeds)
-    sim.run(3)
-    assert fetched_urls_by_step(job2) == sim.fetched_by_step
-    assert seen_urls(job2) == sim.seen
-    for r in io.read(spark, "frontier").collect():
-        assert r["priority"] == wm.host_priority(r["host"])
-        assert r["budget"] == wm.host_budget(r["host"], job2.cfg)
-
-
 def _scan_metric_sums(df) -> dict:
     """numFiles/numPartitions summed over the executed scan leaves — the
     union-of-dirs read has one leaf per snapshot dir."""
@@ -523,48 +421,26 @@ def test_docs_read_prunes_to_one_fetch_step(spark, tmp_path_factory):
     assert fetched_urls_by_step(job) == sim.fetched_by_step
 
 
-def test_legacy_root_default_resume_does_not_stamp_layout(spark, tmp_path_factory):
-    """Round-5 review: resuming a PRE-layout-stamp root with no layout
-    args adopts the constructor defaults (documented legacy gap) but must
-    NOT stamp those guessed values into the frontier meta as if they were
-    the bootstrap truth — otherwise a later resume with the historically
-    CORRECT values is rejected while the wrong ones were blessed. A
-    later resume that passes explicit values IS authoritative and does
-    stamp."""
+def test_resume_without_stored_layout_raises(spark, tmp_path_factory):
+    """Every frontier commit stamps the seen-set layout, so a root whose
+    frontier meta lacks num_shards was not written by this code: resume
+    refuses it with an error naming the key rather than guessing a shard
+    count that could probe the wrong filter shard."""
     seeds = wm.seed_urls(8)
-    root = str(tmp_path_factory.mktemp("legacylayout"))
+    root = str(tmp_path_factory.mktemp("nolayout"))
     CrawlJob(
         spark, root, seeds=seeds, num_shards=4,
         capacity_per_shard=1 << 12, salts=2, index=False,
     ).run(1)
     io = TableIO(root)
+    meta = dict(io.meta("frontier"))
+    meta.pop("num_shards")
+    io.commit_meta("frontier", meta)
 
-    # simulate a pre-upgrade root: strip the layout keys from the meta
-    legacy_meta = {
-        k: v
-        for k, v in io.meta("frontier").items()
-        if k not in ("num_shards", "capacity_per_shard")
-    }
-    io.write("frontier", io.read(spark, "frontier"), meta=legacy_meta)
-
-    # resume with defaults: adopts them, but the next commit must not
-    # bless the guess
-    job = CrawlJob(spark, root, salts=2, index=False)
-    assert job.num_shards == 8  # the documented legacy-gap default
-    job.run(1)
-    assert "num_shards" not in io.meta("frontier")
-    assert "capacity_per_shard" not in io.meta("frontier")
-
-    # the historically-correct explicit resume is still accepted and NOW
-    # becomes the stamped layout truth
-    job2 = CrawlJob(
-        spark, root, num_shards=4, capacity_per_shard=1 << 12,
-        salts=2, index=False,
-    )
-    assert job2.num_shards == 4
-    job2.run(1)
-    assert int(io.meta("frontier")["num_shards"]) == 4
-    assert int(io.meta("frontier")["capacity_per_shard"]) == 1 << 12
+    with pytest.raises(ValueError, match="num_shards"):
+        CrawlJob(spark, root, salts=2, index=False)
+    with pytest.raises(ValueError, match="num_shards"):
+        CrawlJob(spark, root, num_shards=4, salts=2, index=False)
 
 
 def test_migrate_layout_reshards_and_resumes(spark, tmp_path_factory):
@@ -606,8 +482,7 @@ def test_migrate_layout_reshards_and_resumes(spark, tmp_path_factory):
     )
     assert seen.count() == seen.select("url").distinct().count()
     # rebuilt filters keep the no-false-negatives invariant
-    probed = seenset.probe(seen, job2._filter_state())
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
+    assert _false_negatives(seen, job2._filter_state()) == 0
 
     # the continued crawl replays the simulator exactly across the
     # migration boundary
@@ -724,8 +599,7 @@ def test_migrate_layout_capacity_only_skips_seen_rewrite(spark, tmp_path_factory
     from spider_engine_spark.operators.cuckoo import CuckooFilter
     assert nb == {CuckooFilter(1 << 13).nbuckets}
     # no false negatives against the untouched seen table
-    probed = seenset.probe(io.read(spark, "seen"), job._filter_state())
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
+    assert _false_negatives(io.read(spark, "seen"), job._filter_state()) == 0
     # crawl continues exactly
     job.index = False
     job.run(1)
@@ -737,8 +611,8 @@ def test_migrate_layout_capacity_only_skips_seen_rewrite(spark, tmp_path_factory
 def test_run_crawl_migration_flag_guard():
     """The CLI migration guard rejects every flag a --migrate-* run
     would silently ignore — including store_true and non-default-valued
-    flags (round-5 review: --checkpoint-every/--no-index/--host-cache/
-    --no-flush slipped through while --capacity errored)."""
+    flags (round-5 review: --checkpoint-every/--no-index/--no-flush
+    slipped through while --capacity errored)."""
     import argparse
 
     from run_crawl import migration_ignored_flags
@@ -746,7 +620,7 @@ def test_run_crawl_migration_flag_guard():
     def ns(**kw):
         base = dict(
             shards=None, capacity=None, hosts=None, words=None, vocab=None,
-            host_cache=False, no_flush=False, no_index=False, steps=5,
+            no_flush=False, no_index=False, steps=5,
             seeds=100, salts=4, checkpoint_every=1,
         )
         base.update(kw)
@@ -754,7 +628,6 @@ def test_run_crawl_migration_flag_guard():
 
     assert migration_ignored_flags(ns()) == []
     assert migration_ignored_flags(ns(capacity=1 << 12)) == ["--capacity"]
-    assert migration_ignored_flags(ns(host_cache=True)) == ["--host-cache"]
     assert migration_ignored_flags(ns(no_flush=True)) == ["--no-flush"]
     assert migration_ignored_flags(ns(no_index=True)) == ["--no-index"]
     assert migration_ignored_flags(ns(steps=3)) == ["--steps"]

@@ -176,8 +176,6 @@ def test_enrich_host_split_matches_python_reference(spark):
     url_path / robots_allowed / host_priority / host_budget even when the
     canonical URL's path embeds '://' (e.g. a redirect query string) —
     the replay-equality invariant on hostile-but-valid URLs."""
-    from pyspark.sql import functions as F
-
     from spider_engine_spark.operators.frontier import enrich_candidates
 
     urls = [
@@ -196,24 +194,6 @@ def test_enrich_host_split_matches_python_reference(spark):
         assert r["allowed"] == wm.robots_allowed(wm.url_path(cu)), cu
         assert r["priority"] == wm.host_priority(wm.url_host(cu)), cu
         assert r["budget"] == wm.host_budget(wm.url_host(cu)), cu
-
-    # the host_attrs broadcast-join path (the hook for externally-
-    # sourced attrs) must agree with the UDF path row-for-row, with the
-    # table covering some hosts (hit) and missing others (miss -> UDF)
-    hosts = sorted({wm.url_host(wm.canonicalize(u)) for u in urls})
-    covered = hosts[: len(hosts) // 2]
-    attrs = spark.createDataFrame(
-        [
-            (h, wm.host_priority(h), wm.host_budget(h))
-            for h in covered
-        ],
-        "host string, priority int, budget int",
-    )
-    with_table = {
-        r["url"]: r
-        for r in enrich_candidates(raw, host_attrs=attrs).collect()
-    }
-    assert with_table == rows
 
 
 def test_jvm_host_attrs_match_python_reference(spark):
