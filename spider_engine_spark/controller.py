@@ -5,7 +5,8 @@ controller/{database,document}.go's handlers route-for-route, so a user
 of the reference can point the same curl scripts here:
 
     GET    /_status            engine-wide status walk (spider.go:171-186)
-                               plus the session's cache occupancy
+                               plus the session's cache occupancy and
+                               each route's request count and latency
     GET    /_search            search (JSON body: engine.SearchParam)
     GET    /db/table/key       get document
     POST   /db                 create database
@@ -32,8 +33,10 @@ reference's quirk; both route to the same handler).
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -100,6 +103,25 @@ def _to_filter(d: dict, field_types: dict | None = None) -> SearchFilter:
     )
 
 
+def _route(fn):
+    """Run a route inside its own pins.scope() and record its call count
+    and latency (also when it raises) in the controller's route stats."""
+
+    @functools.wraps(fn)
+    def route(self, *a, **kw):
+        t0 = time.perf_counter()
+        try:
+            with scope():
+                return fn(self, *a, **kw)
+        finally:
+            ms = (time.perf_counter() - t0) * 1000
+            with self._stats_lock:
+                n, total, worst = self._stats.get(fn.__name__, (0, 0.0, 0.0))
+                self._stats[fn.__name__] = (n + 1, total + ms, max(worst, ms))
+
+    return route
+
+
 class SpiderController:
     """Handler logic, separated from HTTP plumbing (unit-testable).
 
@@ -107,46 +129,64 @@ class SpiderController:
     pins is released once its response is built, so a long-lived server
     does not accumulate cached blocks. A search pins nothing (it is one
     lazy plan) and an ingest frees its own checkpoints; the scope guards
-    any route that comes to pin."""
+    any route that comes to pin. The same wrapper counts and times each
+    route for the status route."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.catalog = Catalog(spark, root)
         self._lock = threading.Lock()  # the reference serializes writes (C1)
+        self._stats: dict[str, tuple[int, float, float]] = {}
+        self._stats_lock = threading.Lock()
 
     # -- routes ---------------------------------------------------------
-    @scope()
+    @_route
     def status(self) -> dict:
-        """The engine walk plus the session's cache occupancy."""
+        """The engine walk, the session's cache occupancy, and per route
+        the calls finished so far (this one not yet) with their mean and
+        max latency in ms."""
+        with self._stats_lock:
+            routes = {
+                name: {
+                    "count": n,
+                    "mean_ms": round(total / n, 3),
+                    "max_ms": round(worst, 3),
+                }
+                for name, (n, total, worst) in sorted(self._stats.items())
+            }
         return ok(
-            {**self.catalog.status(), "cache": occupancy(self.catalog.spark)}
+            {
+                **self.catalog.status(),
+                "cache": occupancy(self.catalog.spark),
+                "routes": routes,
+            }
         )
 
-    @scope()
+    @_route
     def create_database(self, db: str) -> dict:
         with self._lock:
             self.catalog.create_database(db)
         return ok()
 
-    @scope()
+    @_route
     def drop_database(self, db: str) -> dict:
         with self._lock:
             self.catalog.drop_database(db)
         return ok()
 
-    @scope()
+    @_route
     def create_table(self, db: str, table: str, fields_param: list) -> dict:
         fields = {f["name"]: f["type"] for f in fields_param}
         with self._lock:
             self.catalog.create_table(db, table, fields)
         return ok()
 
-    @scope()
+    @_route
     def drop_table(self, db: str, table: str) -> dict:
         with self._lock:
             self.catalog.drop_table(db, table)
         return ok()
 
-    @scope()
+    @_route
     def alter_table(self, db: str, table: str, body: dict) -> dict:
         op = body.get("type")
         if op not in ("addField", "delField"):
@@ -160,7 +200,7 @@ class SpiderController:
                 t.delete_field(fld["name"])
         return ok()
 
-    @scope()
+    @_route
     def add_doc(self, db: str, table: str, key: str, content: dict) -> dict:
         import uuid as _uuid
 
@@ -187,7 +227,7 @@ class SpiderController:
             return error("add failed (duplicate primary key?)")
         return ok(key)
 
-    @scope()
+    @_route
     def get_doc(self, db: str, table: str, key: str) -> dict:
         d = self.catalog.table(db, table).get_doc(key)
         if d is None:
@@ -195,7 +235,7 @@ class SpiderController:
         d.pop("doc_id", None)
         return ok({"Key": key, "Detail": d})
 
-    @scope()
+    @_route
     def update_doc(self, db: str, table: str, key: str, content: dict) -> dict:
         with self._lock:
             found = self.catalog.table(db, table).update_doc(key, content)
@@ -205,13 +245,13 @@ class SpiderController:
             return error(f"can not find the doc {key}, update failed")
         return ok(key)
 
-    @scope()
+    @_route
     def delete_doc(self, db: str, table: str, key: str) -> dict:
         with self._lock:
             found = self.catalog.table(db, table).delete_doc(key)
         return ok() if found else error("document not found")
 
-    @scope()
+    @_route
     def search(self, p: dict) -> dict:
         t = self.catalog.table(p["database"], p["table"])
         filters = [_to_filter(f, t.fields) for f in p.get("filters") or []]

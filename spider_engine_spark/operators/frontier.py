@@ -54,6 +54,7 @@ from spider_engine_spark.functions.hashes import md5_h60_col
 from spider_engine_spark.operators import seenset
 from spider_engine_spark.operators.postings import aggregate_postings, merge_postings
 from spider_engine_spark.pins import pin, release, scope
+from spider_engine_spark.session import local_frame
 from spider_engine_spark.sources.tableio import TableIO
 
 SPAN_SCHEMA = ArrayType(
@@ -795,8 +796,12 @@ class CrawlJob:
 
     # -- bootstrap ----------------------------------------------------
     def _bootstrap(self, seeds: list[str]) -> None:
-        raw = self.spark.createDataFrame(
-            [(u, 0) for u in seeds], "url_raw string, depth int"
+        """Commit step 0 from the seed URLs. The seeds and the empty
+        filter state (seenset.empty_state) are LocalRelations, so the
+        frontier, seen and filter writes re-scan them without a Python
+        process; only the filter insert's Arrow cogroup runs Python."""
+        raw = local_frame(
+            self.spark, [(u, 0) for u in seeds], "url_raw string, depth int"
         )
         cand = enrich_candidates(raw, self.cfg).filter(F.col("allowed")).drop("allowed")
         cand = seenset.with_shard(cand, "url", self.num_shards)

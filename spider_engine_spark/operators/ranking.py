@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spider_engine_spark.pins import pin, release
+from spider_engine_spark.session import local_frame
 
 _PID = "__rank_pid"
 _LRN = "__rank_local"
@@ -98,7 +99,7 @@ def with_global_ranks(
             ranked.withColumn(out, F.lit(None).cast("long")).drop(_PID, _LRN),
             0,
         )
-    off = spark.createDataFrame(offsets, f"{_PID} int, __rank_off long")
+    off = local_frame(spark, offsets, f"{_PID} int, __rank_off long")
     res = (
         ranked.join(F.broadcast(off), _PID)
         .withColumn(out, (F.col("__rank_off") + F.col(_LRN)).cast("long"))

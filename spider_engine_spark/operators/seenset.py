@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from spider_engine_spark.operators.cuckoo import CuckooFilter
+from spider_engine_spark.session import local_frame
 
 STATE_SCHEMA = StructType(
     [
@@ -45,7 +46,9 @@ STATE_SCHEMA = StructType(
 
 
 def empty_state(spark) -> DataFrame:
-    return spark.createDataFrame([], STATE_SCHEMA)
+    """No filter rows, as a LocalRelation: a consumer's scan of it
+    starts no Python process."""
+    return local_frame(spark, [], STATE_SCHEMA)
 
 
 def shard_expr(hash_col, num_shards: int):

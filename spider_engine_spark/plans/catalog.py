@@ -32,7 +32,6 @@ the k-way merge in the shuffle.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +49,7 @@ from spider_engine_spark.operators.search import (
     search as search_op,
 )
 from spider_engine_spark.pins import pin, scope
+from spider_engine_spark.session import local_frame
 from spider_engine_spark.sources.tableio import TableIO
 
 FIELD_TYPES = {
@@ -149,15 +149,8 @@ class Table:
         if self.io.exists(name):
             self.io.commit_meta(name, meta)
         else:
-            marker = self.spark.createDataFrame([(self.name,)], "table string")
+            marker = local_frame(self.spark, [(self.name,)], "table string")
             self.io.write(name, marker, meta=meta)
-
-    def _local(self, columns: dict[str, list], schema: str) -> DataFrame:
-        """Driver-side rows as an Arrow-backed local frame: it plans as a
-        LocalRelation, so no Python worker decodes it in later scans."""
-        return self.spark.createDataFrame(
-            pd.DataFrame(columns, dtype=object), schema
-        )
 
     # -- views ------------------------------------------------------------
     @property
@@ -229,11 +222,12 @@ class Table:
     # -- S1 add docs ------------------------------------------------------
     def add_docs(self, rows: list[dict]) -> tuple[int, int]:
         """Batch insert of driver-side rows (the REST AddDoc analogue)."""
-        raw = self._local(
-            {
-                f: [None if r.get(f) is None else str(r[f]) for r in rows]
-                for f in self.fields
-            },
+        raw = local_frame(
+            self.spark,
+            [
+                tuple(None if r.get(f) is None else str(r[f]) for f in self.fields)
+                for r in rows
+            ],
             ", ".join(f"`{f}` string" for f in self.fields),
         )
         return self.add_docs_df(raw)
@@ -433,7 +427,7 @@ class Table:
             return False
         self.io.write(
             f"{self.name}__deletes",
-            self._local({"doc_id": ids}, "doc_id long"),
+            local_frame(self.spark, [(i,) for i in ids], "doc_id long"),
             mode="append",
         )
         return True

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 from spider_engine_spark.operators.postings import build_postings_native
 from spider_engine_spark.operators.search import SearchFilter, search
 from spider_engine_spark.pins import pin
+from spider_engine_spark.session import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1162,16 +1163,14 @@ def _spans_oracle() -> str:
 @query("interleaved_spans_roundtrip", _spans_oracle)
 def interleaved_spans_roundtrip(spark, sf_dir):
     """input_hint invariant surface: fetch-simulated interleaved docs
-    (mapInPandas over a distributed seed frame), exploded back to
+    (mapInPandas over a local seed frame), exploded back to
     (doc_id, offset, kind, media_ref). The oracle is the pure-Python
     webmodel evaluated driver-side and inlined as VALUES — span sequence
     and order must round-trip through Arrow bit-for-bit."""
     from spider_engine_spark import webmodel as wm
     from spider_engine_spark.operators.frontier import fetch_docs
 
-    seeds = spark.createDataFrame(
-        [(u,) for u in wm.seed_urls(50)], "url string"
-    )
+    seeds = local_frame(spark, [(u,) for u in wm.seed_urls(50)], "url string")
     docs = fetch_docs(seeds, 0)
     return docs.select(
         "doc_id", F.explode("spans").alias("s")
@@ -2928,9 +2927,7 @@ def interleaved_packing(spark, sf_dir):
     from spider_engine_spark.operators.frontier import fetch_docs
     from spider_engine_spark.operators.packing import pack_interleaved
 
-    seeds = spark.createDataFrame(
-        [(u,) for u in wm.seed_urls(40)], "url string"
-    )
+    seeds = local_frame(spark, [(u,) for u in wm.seed_urls(40)], "url string")
     docs = fetch_docs(seeds, 0)
     return pack_interleaved(
         docs, key="doc_id", spans="spans", block=512, buckets=4

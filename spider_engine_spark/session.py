@@ -8,13 +8,20 @@ local[32] sandbox):
 - Arrow execution on — all pandas-UDF transport is columnar batches.
 - shuffle partitions sized via env so local tests stay fast while the
   same code scales by config only.
+
+`local_frame` is the package's one way to turn driver-side rows into a
+DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -62,3 +69,27 @@ def get_spark(
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows (tuples in schema order) as a DataFrame that
+    plans as a LocalRelation.
+
+    The rows become one Arrow table typed by the Spark schema, so no
+    Python process ever decodes them. `createDataFrame` on a Python
+    list instead parallelizes pickled rows: every scan of that frame
+    re-runs a row-at-a-time PythonRDD and starts a Python daemon with
+    one worker per core, which lives for the rest of the session."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    for f, c in zip(schema.fields, table.columns):
+        if not f.nullable and c.null_count:
+            raise ValueError(f"field {f.name!r} is not nullable, but got None")
+    return spark.createDataFrame(table, schema)

@@ -38,6 +38,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from spider_engine_spark.session import local_frame
+
 
 class TableIO:
     def __init__(self, root: str):
@@ -184,7 +186,9 @@ class TableIO:
         makes the newest schema cover every dir). Parquet-less dirs (a
         zero-row dynamic-partition write leaves no file) are skipped via
         the entry's commit-time record, not a walk; an all-empty version
-        is an empty frame of the committed schema.
+        is an empty LocalRelation of the committed schema, in the order a
+        parquet read yields (partition columns last), so its scans run
+        no job for the files and no Python process.
 
         partition_values prunes a hive-partitioned table BEFORE any
         listing: only the `<dir>/<col>=<v>` subdirs of the table's first
@@ -242,7 +246,7 @@ class TableIO:
                     .parquet(*paths)
                 )
         if not reads:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         out = reads[0]
         for r in reads[1:]:
             out = out.unionByName(r, allowMissingColumns=True)

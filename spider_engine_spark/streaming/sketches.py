@@ -25,12 +25,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from spider_engine_spark.operators.sketches import (
     _check_dims,
     cms_counters,
     hll_registers,
 )
+from spider_engine_spark.session import local_frame
 from spider_engine_spark.sources.tableio import TableIO
 
 _CMS_SCHEMA = "seed int, bucket bigint, cnt bigint"
@@ -52,7 +54,7 @@ def cms_sketch_init(
     _check_dims(width, depth)
     io.write(
         name,
-        spark.createDataFrame([], _CMS_SCHEMA),
+        local_frame(spark, [], _CMS_SCHEMA),
         meta={
             "kind": "cms",
             "term": term,
@@ -223,7 +225,7 @@ def _stream_ingest(
             f"are the sketch identity and live in its meta)"
         )
     col = io.meta(name)[col_meta_key]
-    if col not in spark.createDataFrame([], schema).columns:
+    if col not in DataType.fromDDL(schema).fieldNames():
         raise ValueError(
             f"schema {schema!r} lacks the sketch's {col_meta_key} "
             f"column {col!r}"

@@ -19,6 +19,7 @@ assignment law, so there is nothing to append into before a build.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 from spider_engine_spark.operators.similarity import ivf_append
 from spider_engine_spark.sources.tableio import TableIO
@@ -79,7 +80,7 @@ def stream_ivf_ingest(
             f"assignment law)"
         )
     meta = io.meta(name)
-    cols = set(spark.createDataFrame([], schema).columns)
+    cols = set(DataType.fromDDL(schema).fieldNames())
     missing = {meta["key"], meta["vec"]} - cols
     if missing:
         raise ValueError(

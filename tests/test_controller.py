@@ -33,6 +33,7 @@ def api(spark, tmp_path_factory):
 
 
 def test_rest_full_lifecycle(api):
+    routes0 = api("GET", "/_status")["data"]["routes"]
     # POST /db — create database (controller/database.go:17-40)
     assert api("POST", "/db1")["code"] == 0
     # POST /db/table — body is the fields ARRAY (database.go:70-110)
@@ -130,6 +131,19 @@ def test_rest_full_lifecycle(api):
     cache = st["data"]["cache"]
     assert set(cache) == {"persisted_rdds", "storage_bytes"}
     assert cache["persisted_rdds"] >= 0 and cache["storage_bytes"] >= 0
+    # ... and per route the calls finished so far, failed ones included
+    # (this status call is not yet counted), with their latency
+    routes = st["data"]["routes"]
+    calls = {
+        name: r["count"] - routes0.get(name, {"count": 0})["count"]
+        for name, r in routes.items()
+    }
+    assert {name: n for name, n in calls.items() if n} == {
+        "status": 1, "create_database": 2, "create_table": 2, "add_doc": 4,
+        "get_doc": 3, "search": 2, "update_doc": 2, "alter_table": 1,
+        "delete_doc": 1,
+    }
+    assert all(0 < r["mean_ms"] <= r["max_ms"] for r in routes.values())
     for i in range(10):
         body = {"database": "db1", "table": "user", "value": "美食"}
         if i % 2:
