@@ -114,6 +114,8 @@ class CuckooFilter:
         per-item eviction walk.  Deterministic: placement depends only on
         (table state, input array order); the eviction walk keeps the
         original fixed-seed LCG chain over the residue in array order.
+        seenset.insert sorts each shard's hashes before calling this, so
+        persisted filter bytes depend only on the table and the hash set.
 
         Byte-format note: this law places ALL first-choice winners before
         ANY second-choice placements, so for the same (table, input

@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spider_engine_spark.functions.hashes import md5_h60_col
+from spider_engine_spark.functions.text_analysis import tokens
 from spider_engine_spark.pins import pin, release
-
-TOKEN_SPLIT = r"\s+"
 
 
 def exact_dedup(df: DataFrame, key: str, content: str) -> DataFrame:
@@ -44,10 +43,6 @@ def exact_dedup(df: DataFrame, key: str, content: str) -> DataFrame:
     )
 
 
-def tokens_col(content: str):
-    return F.filter(F.split(F.col(content), TOKEN_SPLIT), lambda t: t != "")
-
-
 def shingles_col(content: str, n: int = 3):
     """n-gram shingles of the whitespace token stream (native).
 
@@ -55,7 +50,7 @@ def shingles_col(content: str, n: int = 3):
     as an EXPRESSION, re-splitting the text per shingle (trees, not
     DAGs).  Pipelines should go through with_shingles /
     exploded_shingles, which materialize the token array first."""
-    return _shingles_from(tokens_col(content), n)
+    return _shingles_from(tokens(F.col(content)), n)
 
 
 def _shingles_from(toks, n: int):
@@ -72,7 +67,7 @@ def with_shingles(df: DataFrame, content: str, n: int, out: str) -> DataFrame:
     the shingle array from the per-row VALUE (the bare shingles_col expr
     re-splits the text per shingle; measured multi-x on corpus scans)."""
     tk = f"_sh_toks_{out}"
-    d = df.withColumn(tk, tokens_col(content))
+    d = df.withColumn(tk, tokens(F.col(content)))
     return d.withColumn(out, _shingles_from(F.col(tk), n)).drop(tk)
 
 
@@ -95,7 +90,7 @@ def exploded_tokens(df: DataFrame, key: str, content: str) -> DataFrame:
     """(key, term) rows, same explode_outer pattern (a plain explode's
     inferred size>0 filter re-splits the text a second time per row)."""
     tk = "_tok_arr"
-    d = df.withColumn(tk, tokens_col(content))
+    d = df.withColumn(tk, tokens(F.col(content)))
     return d.select(
         key, F.explode_outer(tk).alias("term")
     ).filter(F.col("term").isNotNull())

@@ -82,49 +82,6 @@ DOC_SCHEMA = StructType(
 )
 
 
-def canonicalize_col(c) -> "F.Column":
-    """100% JVM form of webmodel.canonicalize — bit-identical (the
-    replay-equality tests compare against the scalar Python version):
-    strip, cut fragment, strip; default scheme http; lowercase
-    scheme+netloc; drop :80; collapse empty path to '/'.
-
-    Single-expression form, for ad-hoc column use. The crawl's hot path
-    (enrich_candidates) evaluates the SAME formula as a ladder of
-    narrow projections instead: Column expressions are trees, so this
-    one-expression form re-evaluates shared subterms per reference and,
-    combined into larger projections, can push generated methods past
-    the JVM 64 KB codegen limit."""
-    # Python str.strip() strips UNICODE whitespace; (?U) makes Java's \s
-    # match the same class
-    ws = r"(?U)^\s+|\s+$"
-    u = F.regexp_replace(c, ws, "")
-    u = F.regexp_replace(F.substring_index(u, "#", 1), ws, "")
-    has = u.contains("://")
-    # split at the FIRST '://' (substring_index(…, -1) would split at the
-    # last — wrong for e.g. 'http://h/redirect?to=b://c')
-    first = F.substring_index(u, "://", 1)
-    scheme = F.when(has, F.lower(first)).otherwise(F.lit("http"))
-    rest = F.when(has, u.substr(F.length(first) + 4, F.length(u))).otherwise(u)
-    slash = F.instr(rest, "/")
-    # \z = absolute end of input: '$' would also match before a final
-    # line terminator (LF, CRLF, U+0085, U+2028), diverging from
-    # Python's endswith(':80')
-    netloc = F.regexp_replace(
-        F.lower(
-            F.when(
-                slash > 0, F.substring(rest, F.lit(1), slash - 1)
-            ).otherwise(rest)
-        ),
-        r":80\z",
-        "",
-    )
-    path = F.when(slash > 0, rest.substr(slash, F.length(rest))).otherwise(
-        F.lit("/")
-    )
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    return F.concat(scheme, F.lit("://"), netloc, path)
-
-
 def host_attr_cols(cfg: wm.WebConfig, host=None):
     """JVM-native (priority, budget) columns for a host column.
 
@@ -166,9 +123,9 @@ def enrich_candidates(
     projections (each intermediate — stripped input, scheme, rest,
     netloc, path — is computed ONCE into a column and the next rung
     references it as an attribute). Column expressions are trees, not
-    DAGs: inlining canonicalize_col plus a host/path re-split into one
-    projection duplicates the regexp chain dozens of times per row,
-    blowing the generated processNext() past the JVM's 64 KB method
+    DAGs: inlining the whole canonicalizer plus a host/path re-split
+    into one projection duplicates the regexp chain dozens of times per
+    row, blowing the generated processNext() past the JVM's 64 KB method
     limit (whole-stage codegen falls back to interpreted) and
     re-evaluating each regexp per reference. Catalyst's CollapseProject
     keeps the rungs separate (it refuses to inline non-cheap
@@ -177,10 +134,16 @@ def enrich_candidates(
     exactly once. The canonical host/path fall out of the ladder's own
     netloc/path rungs — no re-split of the finished URL, so a path
     embedding '://' can never confuse the host."""
-    ws = r"(?U)^\s+|\s+$"  # Java \s == Python str.strip under (?U)
+    # webmodel.canonicalize: strip, cut fragment, strip; default scheme
+    # http; lowercase scheme+netloc; drop :80; collapse empty path to
+    # '/'. Python str.strip() strips UNICODE whitespace; (?U) makes
+    # Java's \s match the same class
+    ws = r"(?U)^\s+|\s+$"
     stripped = F.regexp_replace(F.col("url_raw"), ws, "")
     u = F.regexp_replace(F.substring_index(stripped, "#", 1), ws, "")
     s1 = raw.select(u.alias("_u"), "depth")
+    # split at the FIRST '://' (substring_index(…, -1) would split at the
+    # last — wrong for e.g. 'http://h/redirect?to=b://c')
     s2 = s1.select(
         "*",
         F.col("_u").contains("://").alias("_has"),
@@ -208,7 +171,10 @@ def enrich_candidates(
                 F.substring(F.col("_rest"), F.lit(1), F.col("_slash") - 1),
             ).otherwise(F.col("_rest"))
         ),
-        r":80\z",  # \z not '$': see canonicalize_col
+        # \z = absolute end of input: '$' would also match before a
+        # final line terminator (LF, CRLF, U+0085, U+2028), diverging
+        # from Python's endswith(':80')
+        r":80\z",
         "",
     )
     path = F.when(
@@ -531,9 +497,9 @@ class CrawlJob:
         epoch is the single commit point. A crash before it leaves
         higher-epoch orphans that _revert_orphans rolls back on the next
         resume, so the stored layout and the table sharding can never
-        disagree. The rebuild sorts each shard's hashes
-        (sort_within_shard), making the migrated filter bytes a
-        deterministic function of the URL set — WITHIN one code version:
+        disagree. The insert sorts each shard's hashes, making the
+        migrated filter bytes a deterministic function of the URL set —
+        WITHIN one code version:
         the cuckoo bulk-insert placement law (all first-choice winners
         placed before any second-choice placements since the vectorized
         two-pass rewrite) is part of that function, so rebuilt-filter
@@ -616,7 +582,6 @@ class CrawlJob:
                 reshard.select("shard", "hash"),
                 seenset.empty_state(spark),
                 new_cap,
-                sort_within_shard=True,
             )
             job.io.write(
                 "filter",
@@ -1034,9 +999,7 @@ class CrawlJob:
             # (_filter_state). A full-state rewrite would round-trip every
             # shard's bytes through Arrow and onto disk each superstep
             # (~32 GiB at the 10^10-URL sizing) even when one shard changed.
-            dirty = seenset.insert(
-                admitted, state, self.capacity, dirty_only=True
-            )
+            dirty = seenset.insert(admitted, state, self.capacity)
             self._put(
                 "filter", dirty.withColumn("step", F.lit(step + 1)), lmeta,
                 append=True,

@@ -12,8 +12,8 @@ API surface):
   maybe-seen      = exact LEFT SEMI join vs seen table (small fraction =
                     FP rate + true dups)
   admitted        = definitely-new UNION (maybe-seen MINUS exact-seen)
-      cogroup(shard) with filter-state table
-      -> new filter-state rows                    (insert)
+      cogroup(shard) with the dirty shards' filter-state rows
+      -> their new filter-state rows, appended    (insert)
 
 The exact seen table is itself hash-partitioned parquet via TableIO; at
 10^10 URLs only the (tiny) maybe-seen fraction ever joins against it.
@@ -21,6 +21,7 @@ The exact seen table is itself hash-partitioned parquet via TableIO; at
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,80 +68,62 @@ def with_shard(df: DataFrame, url_col: str, num_shards: int) -> DataFrame:
     )
 
 
+def _shard_filter(state: pd.DataFrame) -> CuckooFilter:
+    """Decode a shard's one filter-state row."""
+    if len(state) > 1:
+        raise ValueError(
+            "unresolved filter state: expected one row per shard "
+            "— resolve append-only state with latest_state() first"
+        )
+    return CuckooFilter.from_bytes(bytes(state["data"].iloc[0]))
+
+
 def insert(
-    admitted: DataFrame,
-    state: DataFrame,
-    capacity_per_shard: int,
-    dirty_only: bool = False,
-    sort_within_shard: bool = False,
+    admitted: DataFrame, state: DataFrame, capacity_per_shard: int
 ) -> DataFrame:
-    """Return the filter-state table with admitted hashes added.
+    """Filter-state rows for the shards that received admitted hashes,
+    with those hashes added; shards with no admitted rows emit nothing.
 
-    dirty_only=False: the full state — shards with no admitted rows pass
-    through unchanged (cogroup emits them with an empty left side). Used
-    where the whole state is built at once (bootstrap, re-shard).
+    Callers append the result (tagged with a step column) and readers
+    resolve latest-row-per-shard via latest_state(); bootstrap and the
+    re-shard migration pass empty_state(), so there the result is the
+    whole state. The state side is pre-pruned to the dirty shards with a
+    broadcast semi-join, so untouched shards' bytes never enter the
+    cogroup shuffle (at the documented 10^10-URL sizing a full-state
+    round trip moves ~32 GiB of filter bytes through Arrow per
+    superstep even when one shard changed).
 
-    dirty_only=True: ONLY shards that received admitted rows. The
-    superstep appends these (with a step column) instead of rewriting the full
-    state table — at the documented 10^10-URL sizing a full rewrite
-    round-trips ~32 GiB of filter bytes through Arrow and onto disk per
-    superstep even when one shard changed. The state side is additionally
-    pre-pruned to the dirty shards with a broadcast semi-join, so
-    untouched shards' table bytes never enter the cogroup shuffle at all
-    (without it they would round-trip through Arrow just to emit
-    nothing). Readers resolve latest-row-per-shard via latest_state().
-
-    sort_within_shard=True sorts each shard's hashes before insertion so
-    the filter BYTES are a deterministic function of the hash SET (the
-    superstep path leaves it off: there the insertion order is the
-    admitted DataFrame's order and correctness only needs membership;
-    the re-shard migration turns it on so a rebuilt layout is
-    byte-reproducible)."""
+    Each shard's hashes are sorted before insertion, so the filter
+    bytes are a function of the state and the hash SET, not of the
+    admitted frame's row order: a re-shard rebuild and a superstep
+    replayed after a crash both produce byte-identical filters."""
 
     def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if sort_within_shard and not left.empty:
-            left = left.sort_values("hash", kind="stable")
-        if dirty_only and left.empty:
+        if left.empty:
             return pd.DataFrame(columns=["shard", "nbuckets", "count", "data"])
         if right.empty:
-            if left.empty:
-                return pd.DataFrame(
-                    columns=["shard", "nbuckets", "count", "data"]
-                )
             filt = CuckooFilter(capacity_per_shard)
-            shard = int(left["shard"].iloc[0])
             count = 0
         else:
-            if len(right) > 1:
-                raise ValueError(
-                    "unresolved filter state: expected one row per shard "
-                    "— resolve append-only state with latest_state() first"
-                )
-            filt = CuckooFilter.from_bytes(bytes(right["data"].iloc[0]))
-            shard = int(right["shard"].iloc[0])
+            filt = _shard_filter(right)
             count = int(right["count"].iloc[0])
-        n = 0
-        if not left.empty:
-            n = filt.insert(left["hash"].to_numpy().astype("uint64"))
+        n = filt.insert(np.sort(left["hash"].to_numpy()).astype("uint64"))
         return pd.DataFrame(
             {
-                "shard": [shard],
+                "shard": [int(left["shard"].iloc[0])],
                 "nbuckets": [filt.nbuckets],
                 "count": [count + n],
                 "data": [filt.to_bytes()],
             }
         )
 
-    if dirty_only:
-        state = state.join(
-            F.broadcast(admitted.select("shard").distinct()),
-            "shard",
-            "leftsemi",
-        )
+    dirty = state.join(
+        F.broadcast(admitted.select("shard").distinct()), "shard", "leftsemi"
+    )
     return (
         admitted.select("shard", "hash")
         .groupBy("shard")
-        .cogroup(state.groupBy("shard"))
+        .cogroup(dirty.groupBy("shard"))
         .applyInPandas(fn, STATE_SCHEMA)
     )
 
@@ -183,12 +166,7 @@ def probe_hashes(keys: DataFrame, state: DataFrame) -> DataFrame:
             return pd.DataFrame({"shard": [], "hash": []}).astype(
                 {"shard": "int32", "hash": "int64"}
             )
-        if len(right) > 1:
-            raise ValueError(
-                "unresolved filter state: expected one row per shard — "
-                "resolve append-only state with latest_state() first"
-            )
-        filt = CuckooFilter.from_bytes(bytes(right["data"].iloc[0]))
+        filt = _shard_filter(right)
         hits = filt.contains(left["hash"].to_numpy().astype("uint64"))
         out = left.loc[hits, ["shard", "hash"]]
         return out

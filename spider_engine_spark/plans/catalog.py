@@ -571,7 +571,7 @@ class Table:
     def compact(self, max_bytes: int | None = None) -> None:
         """I10: merge the postings/base append chains.
 
-        max_bytes=None rewrites each chain into one snapshot. With
+        max_bytes=None folds each chain's data dirs into one. With
         max_bytes set, the merge planner is incremental like the
         reference's (table.go:874-971 picks only undersized partition
         groups): data dirs >= max_bytes are carried over untouched and
@@ -582,18 +582,10 @@ class Table:
             name = self.name + suffix
             if not self.io.exists(name):
                 continue
-            transform = merge_postings if suffix == "__postings" else None
-            part = ["term_bucket"] if suffix == "__postings" else None
-            if max_bytes is None:
-                df = self.io.read(self.spark, name)
-                if transform:
-                    df = transform(df)
-                self.io.write(name, df, mode="overwrite", partition_by=part)
-            else:
-                self.io.compact_small(
-                    self.spark, name, max_bytes=max_bytes,
-                    transform=transform, partition_by=part,
-                )
+            self.io.compact_small(
+                self.spark, name, max_bytes=max_bytes,
+                transform=merge_postings if suffix == "__postings" else None,
+            )
 
 
 class Catalog:

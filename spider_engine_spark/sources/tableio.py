@@ -139,15 +139,9 @@ class TableIO:
         return new_version
 
     def _known_empty(self, entry: dict) -> set[str]:
-        """Parquet-less dirs of a version entry. Entries committed by
-        this code record them ("empty_dirs"); older manifests are
-        upgraded by walking their dirs once here (write-time), so reads
-        stay listing-free either way."""
-        if "empty_dirs" in entry:
-            return set(entry["empty_dirs"])
-        return {
-            d for d in entry["dirs"] if not self._has_data_files(d)
-        }
+        """Parquet-less dirs of a version entry, as recorded at commit
+        time, so reads stay listing-free."""
+        return set(entry["empty_dirs"])
 
     def _new_data_dir(
         self,
@@ -278,17 +272,6 @@ class TableIO:
             if os.path.exists(self._manifest_path(d))
         )
 
-    def compact(self, spark: SparkSession, name: str, meta: dict | None = None) -> int:
-        """Rewrite the append chain into a single snapshot (the analogue of
-        the reference's partition merge, table.go:874-971 / Iceberg
-        rewrite_data_files)."""
-        entry = self._entry(name)
-        df = self.read(spark, name)
-        return self.write(
-            name, df, mode="overwrite", meta=meta,
-            partition_by=entry.get("partition_by"),
-        )
-
     def _dir_bytes(self, d: str) -> int:
         total = 0
         for base, _dirs, files in os.walk(d):
@@ -303,7 +286,7 @@ class TableIO:
         self,
         spark: SparkSession,
         name: str,
-        max_bytes: int = 64 << 20,
+        max_bytes: int | None = 64 << 20,
         meta: dict | None = None,
         transform=None,
         partition_by: list[str] | None = None,
@@ -311,8 +294,9 @@ class TableIO:
         """Incremental merge planner: fold only data dirs < max_bytes into
         one new dir; dirs >= max_bytes are referenced untouched by the new
         snapshot (the reference's pick-undersized-groups behavior,
-        table.go:874-971). Returns the new version, or None if fewer than
-        two undersized dirs exist (nothing to merge).
+        table.go:874-971, and Iceberg's rewrite_data_files). max_bytes=None
+        folds every non-empty dir. Returns the new version, or None if
+        fewer than two dirs qualify (nothing to merge).
 
         transform: optional DataFrame->DataFrame applied to the merged
         small-dir union (e.g. postings re-grouping).  partition_by
@@ -326,7 +310,11 @@ class TableIO:
         # them from the fold AND from the new snapshot's dir list
         empty = self._known_empty(entry)
         dirs = [d for d in entry["dirs"] if d not in empty]
-        small = [d for d in dirs if self._dir_bytes(d) < max_bytes]
+        small = [
+            d
+            for d in dirs
+            if max_bytes is None or self._dir_bytes(d) < max_bytes
+        ]
         big = [d for d in dirs if d not in small]
         if len(small) <= 1:
             return None

@@ -1,32 +1,27 @@
 """Custom stateful streaming operator: incremental URL-seen dedup.
 
 The batch crawl keeps its seen-set in sharded cuckoo filters
-(operators/seenset.py); this is the streaming form: a keyed
-`applyInPandasWithState` operator whose per-shard state is the set of
-seen url hashes. Each micro-batch emits only first-seen URLs — the
-streaming analogue of the frontier's admit step (and of the reference's
-PK-duplicate rejection, table.go:451-454), with state-store-backed
-exactly-once semantics across micro-batches.
+(operators/seenset.py); this is the streaming form. The durable seen
+table ends up holding only first-seen URLs — the streaming analogue of
+the frontier's admit step (and of the reference's PK-duplicate
+rejection, table.go:451-454), with state-store-backed exactly-once
+semantics across micro-batches.
 
-Two forms:
+- `stateful_seen_flag`: a keyed `applyInPandasWithState` operator whose
+  per-shard state is the shard's CONSTANT-SIZE cuckoo table bytes. It
+  emits every batch-first row with a `maybe_seen` flag.
+- `make_seen_batch_handler`: the foreachBatch side. It admits
+  definitely-new rows outright and resolves maybe-seen rows exactly
+  against the durable seen table (FP audit).
+- `stream_seen_dedup_scalable`: the two wired into one query.
 
-- `stateful_seen_flag` + `make_seen_batch_handler` — the AT-SCALE form
-  (the shipped default, mirroring the batch seenset): per-shard state is
-  the CONSTANT-SIZE cuckoo table bytes; the operator emits every
-  batch-first row with a `maybe_seen` flag and the foreachBatch handler
-  resolves flags exactly against the durable seen table (FP audit).
-  Exactness across batches relies on a structural cuckoo property: a
-  false positive is a fingerprint match in one of the probe's two legal
-  buckets, and the colliding entry's bucket pair {b, b ^ h(fp)} is THE
-  SAME pair (equal fingerprints pair identically), so evictions never
-  move it out of reach — a hash once flagged maybe stays maybe, and the
-  exact table settles it every time. No deletions, so the property holds
-  for the filter's lifetime.
-
-- `stateful_seen_dedup` — the single-operator exact form (state = packed
-  uint64 hash array). Self-contained and exact, but state grows with the
-  number of distinct keys; fine for bounded keyspaces, superseded by the
-  flag+audit pipeline at crawl scale.
+Exactness across batches relies on a structural cuckoo property: a false
+positive is a fingerprint match in one of the probe's two legal buckets,
+and the colliding entry's bucket pair {b, b ^ h(fp)} is THE SAME pair
+(equal fingerprints pair identically), so evictions never move it out of
+reach — a hash once flagged maybe stays maybe, and the exact table
+settles it every time. No deletions, so the property holds for the
+filter's lifetime.
 """
 
 from __future__ import annotations
@@ -38,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
     IntegerType,
@@ -50,14 +44,6 @@ from pyspark.sql.types import (
 
 from spider_engine_spark.operators.seenset import shard_expr
 from spider_engine_spark.pins import pin, scope
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("shard", IntegerType(), False),
-    ]
-)
-STATE_SCHEMA = StructType([StructField("hashes", ArrayType(LongType()), True)])
 
 FLAGGED_SCHEMA = StructType(
     [
@@ -227,104 +213,4 @@ def stream_seen_dedup_scalable(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def _dedup_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-    # fully vectorized: first-occurrence dedup within the batch via
-    # pandas drop_duplicates, membership vs state via np.isin — no
-    # Python loop over rows anywhere in the operator
-    seen = np.array(
-        state.get[0] if state.exists and state.get[0] else [], dtype=np.int64
-    )
-    out_frames: list[pd.DataFrame] = []
-    for pdf in pdf_iter:
-        pdf = pdf.drop_duplicates(subset=["hash"], keep="first")
-        hashes = pdf["hash"].to_numpy(dtype=np.int64)
-        fresh = ~np.isin(hashes, seen)
-        new = pdf.loc[fresh]
-        if len(new):
-            out_frames.append(new[["url"]])
-            seen = np.concatenate([seen, hashes[fresh]])
-    state.update((seen.tolist(),))
-    if out_frames:
-        out = pd.concat(out_frames, ignore_index=True)
-        out["shard"] = int(key[0])
-        yield out
-
-
-def stateful_seen_dedup(
-    stream: DataFrame, url_col: str = "url", n_shards: int = 8
-) -> DataFrame:
-    """streaming df with a `url` column -> first-seen urls only (stateful
-    across micro-batches)."""
-    keyed = stream.select(
-        F.col(url_col).alias("url"),
-        F.xxhash64(F.col(url_col)).alias("hash"),
-    ).withColumn(
-        "shard", shard_expr(F.col("hash"), n_shards)
-    )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _dedup_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
-def stateful_seen_dedup_tws(
-    stream: DataFrame, url_col: str = "url", n_shards: int = 8
-) -> DataFrame:
-    """Spark 4 transformWithStateInPandas form of the same operator: a
-    StatefulProcessor with a typed ValueState holding the shard's seen
-    hashes (RocksDB state store). Functionally identical to
-    stateful_seen_dedup; this is the forward-looking API (timers, typed
-    state, schema evolution) the applyInPandasWithState form migrates to.
-
-    ENV NOTE: the TWS driver worker requires google.protobuf, which is
-    not installed in this container — the pytest skips without it (same
-    honest gating as the multimodal codecs); the operator itself is the
-    correct shape for environments that have it.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SeenDedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            seen = np.array(
-                self._seen.get()[0] if self._seen.exists() else [],
-                dtype=np.int64,
-            )
-            for pdf in rows:
-                pdf = pdf.drop_duplicates(subset=["hash"], keep="first")
-                hashes = pdf["hash"].to_numpy(dtype=np.int64)
-                fresh = ~np.isin(hashes, seen)
-                new = pdf.loc[fresh]
-                if len(new):
-                    seen = np.concatenate([seen, hashes[fresh]])
-                    out = new[["url"]].copy()
-                    out["shard"] = int(key[0])
-                    yield out
-            self._seen.update((seen.tolist(),))
-
-        def close(self) -> None:
-            pass
-
-    keyed = stream.select(
-        F.col(url_col).alias("url"),
-        F.xxhash64(F.col(url_col)).alias("hash"),
-    ).withColumn(
-        "shard", shard_expr(F.col("hash"), n_shards)
-    )
-    return keyed.groupBy("shard").transformWithStateInPandas(
-        statefulProcessor=SeenDedup(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )

@@ -866,7 +866,7 @@ def test_ivf_append_guards(spark, tmp_path_factory):
 
 
 def test_compaction_preserves_hive_partitioning(spark, tmp_path_factory):
-    """compact/compact_small must rewrite WITH the table's recorded
+    """compact_small must rewrite WITH the table's recorded
     hive layout: flattening ivf_list would silently trade away the
     partition pruning the index exists for."""
     from spider_engine_spark.operators.similarity import (
@@ -890,7 +890,8 @@ def test_compaction_preserves_hive_partitioning(spark, tmp_path_factory):
         ),
     )
     meta = dict(tio.meta("ivf"))
-    tio.compact(spark, "ivf", meta=meta)  # fold the append chain
+    # fold the append chain
+    tio.compact_small(spark, "ivf", max_bytes=None, meta=meta)
     assert tio._entry("ivf")["partition_by"] == ["ivf_list"]
     page = ivf_probe_index(spark, tio, "ivf", qvec, k=3, n_probe=2)
     rows = page.collect()

@@ -556,21 +556,41 @@ def test_migrate_layout_rejects_overfull_shard(spark, tmp_path_factory):
 
 
 def test_seenset_insert_sorted_is_order_independent(spark):
-    """sort_within_shard=True makes the filter bytes a function of the
-    hash SET, not the DataFrame row order — the property the re-shard
-    migration's byte-reproducibility rests on."""
-    rows = [(i % 4, (i * 0x9E3779B97F4A7C15) % (1 << 63)) for i in range(500)]
-    df = spark.createDataFrame(rows, "shard int, hash long")
+    """insert sorts each shard's hashes, so the filter bytes are a
+    function of the state and the hash SET, not the DataFrame row order
+    — the property the re-shard migration's byte-reproducibility and a
+    replayed superstep rest on. Only shards that received rows come
+    back, also over a non-empty state."""
+    def hashes(lo, hi):
+        return [
+            (i % 4, (i * 0x9E3779B97F4A7C15) % (1 << 63)) for i in range(lo, hi)
+        ]
 
-    def state_bytes(d):
-        out = seenset.insert(
-            d, seenset.empty_state(spark), 1 << 10, sort_within_shard=True
-        )
+    df = spark.createDataFrame(hashes(0, 500), "shard int, hash long")
+
+    def state_bytes(d, state):
+        out = seenset.insert(d, state, 1 << 10)
         return {r["shard"]: bytes(r["data"]) for r in out.collect()}
 
-    a = state_bytes(df.orderBy(F.col("hash").asc()).repartition(7))
-    b = state_bytes(df.orderBy(F.col("hash").desc()).coalesce(1))
-    assert a == b
+    def orders(d):
+        return (
+            d.orderBy(F.col("hash").asc()).repartition(7),
+            d.orderBy(F.col("hash").desc()).coalesce(1),
+        )
+
+    empty = seenset.empty_state(spark)
+    a, b = (state_bytes(d, empty) for d in orders(df))
+    assert a == b and set(a) == {0, 1, 2, 3}
+
+    # a non-empty state; the new rows touch shards 1 and 3 only
+    state = seenset.insert(df, empty, 1 << 10)
+    more = spark.createDataFrame(
+        [r for r in hashes(500, 900) if r[0] in (1, 3)], "shard int, hash long"
+    )
+    a2, b2 = (state_bytes(d, state) for d in orders(more))
+    assert set(a2) == {1, 3}
+    assert a2 == b2
+    assert a2[1] != a[1] and a2[3] != a[3]
 
 
 def test_migrate_layout_capacity_only_skips_seen_rewrite(spark, tmp_path_factory):

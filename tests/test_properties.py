@@ -92,13 +92,12 @@ def test_cuckoo_never_false_negative(keys):
 
 
 def test_jvm_canonicalize_matches_python_reference(spark):
-    """The whole-stage-codegen canonicalize_col must be bit-identical to
-    webmodel.canonicalize across the URL shapes the synthetic web (and
-    real crawls) produce: case noise, :80 ports, fragments, whitespace,
-    missing schemes, empty paths, multi-segment paths, unicode hosts."""
-    from pyspark.sql import functions as F
-
-    from spider_engine_spark.operators.frontier import canonicalize_col
+    """The JVM canonicalizer (the enrich_candidates projection ladder)
+    must be bit-identical to webmodel.canonicalize across the URL shapes
+    the synthetic web (and real crawls) produce: case noise, :80 ports,
+    fragments, whitespace, missing schemes, empty paths, multi-segment
+    paths, unicode hosts."""
+    from spider_engine_spark.operators.frontier import enrich_candidates
 
     hosts = ["HOST3.Example.COM", "host0.example.com", "xn--bcher-kva.tld"]
     paths = ["", "/", "/p/123", "/a/b/c?q=1", "/private/9",
@@ -125,22 +124,10 @@ def test_jvm_canonicalize_matches_python_reference(spark):
         "http://a:80 /x", "http://a:80",
     ]
     expected = [wm.canonicalize(u) for u in cases]
-    df = spark.createDataFrame([(u,) for u in cases], "u string")
-    got = [
-        r["c"]
-        for r in df.select(canonicalize_col(F.col("u")).alias("c"))
-        .collect()
-    ]
-    assert got == expected
-
-    # the enrich_candidates projection LADDER is a second hand-kept copy
-    # of the same formula — run the identical matrix through it (depth
-    # doubles as the row index since output order is not guaranteed)
+    # depth doubles as the row index since output order is not guaranteed
     raw = spark.createDataFrame(
         [(u, i) for i, u in enumerate(cases)], "url_raw string, depth int"
     )
-    from spider_engine_spark.operators.frontier import enrich_candidates
-
     ladder = {
         r["depth"]: r["url"]
         for r in enrich_candidates(raw).select("url", "depth").collect()

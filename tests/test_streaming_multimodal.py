@@ -119,48 +119,6 @@ def test_thumbnail_and_frame_sample(media):
         assert frames.filter(F.col("ts_ms") % 1000 != 0).count() == 0
 
 
-def test_stateful_seen_dedup(spark, tmp_path):
-    """applyInPandasWithState URL-seen: dedup must hold WITHIN and ACROSS
-    micro-batches (state-store backed)."""
-    from spider_engine_spark.streaming.stateful import stateful_seen_dedup
-
-    src = str(tmp_path / "urls")
-    ckpt = str(tmp_path / "ckpt2")
-    spark.createDataFrame(
-        [("http://a/1",), ("http://a/2",), ("http://a/1",)], "url string"
-    ).write.mode("append").parquet(src)
-
-    collected: list[str] = []
-
-    def run_batch():
-        stream = spark.readStream.schema("url string").parquet(src)
-        out = stateful_seen_dedup(stream, n_shards=2)
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, _id: collected.extend(
-                    r["url"] for r in df.collect()
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch()
-    assert set(collected) == {"http://a/1", "http://a/2"}  # in-batch dup dropped
-    assert len(collected) == 2
-
-    # batch 2: one repeat (cross-batch dup) + one new
-    spark.createDataFrame(
-        [("http://a/2",), ("http://b/9",)], "url string"
-    ).write.mode("append").parquet(src)
-    run_batch()
-    assert set(collected) == {"http://a/1", "http://a/2", "http://b/9"}
-    assert len(collected) == 3  # the cross-batch duplicate was dropped
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Event-time semantics end-to-end: a row arriving in a later
     micro-batch with event time older than the watermark horizon is
@@ -212,67 +170,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert ("2024-01-01 08:00:00", "click") not in counts
 
 
-def test_stateful_seen_dedup_tws(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API) form of the
-    URL-seen operator: same within/across-batch dedup semantics, RocksDB
-    state store. Requires google.protobuf (the TWS driver worker speaks
-    protobuf to the JVM) — not installed in this container, so this test
-    skips there; the applyInPandasWithState form above is the covered
-    path."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from spider_engine_spark.streaming.stateful import (
-        stateful_seen_dedup_tws,
-    )
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "urls")
-        ckpt = str(tmp_path / "ckpt_tws")
-        spark.createDataFrame(
-            [("http://a/1",), ("http://a/2",), ("http://a/1",)],
-            "url string",
-        ).write.mode("append").parquet(src)
-        collected: list[str] = []
-
-        def run_batch():
-            stream = spark.readStream.schema("url string").parquet(src)
-            out = stateful_seen_dedup_tws(stream, n_shards=2)
-            q = (
-                out.writeStream.foreachBatch(
-                    lambda df, _id: collected.extend(
-                        r["url"] for r in df.collect()
-                    )
-                )
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_batch()
-        assert sorted(collected) == ["http://a/1", "http://a/2"]
-        spark.createDataFrame(
-            [("http://a/2",), ("http://b/9",)], "url string"
-        ).write.mode("append").parquet(src)
-        run_batch()
-        assert sorted(collected) == [
-            "http://a/1", "http://a/2", "http://b/9",
-        ]
-    finally:
-        if old:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_stateful_seen_flag_state_is_constant_size(spark):
     """Round-3 advice #5: the scalable dedup's per-shard state must be
     the constant-size cuckoo bytes, not an ever-growing hash list.
@@ -314,8 +211,9 @@ def test_stateful_seen_flag_state_is_constant_size(spark):
 
 def test_stream_seen_dedup_scalable_exact(spark, tmp_path):
     """The flag operator + FP-audit handler together are EXACT first-seen
-    dedup across micro-batches; the durable seen table holds each URL
-    once (dedup results unchanged vs the exact-state operator)."""
+    dedup WITHIN and ACROSS micro-batches (state-store backed): after
+    every batch the durable seen table holds each URL seen so far
+    exactly once."""
     from spider_engine_spark.sources.tableio import TableIO
     from spider_engine_spark.streaming.stateful import (
         stream_seen_dedup_scalable,
@@ -334,16 +232,19 @@ def test_stream_seen_dedup_scalable_exact(spark, tmp_path):
         )
         q.awaitTermination(120)
 
-    add_and_run(["http://a/1", "http://a/2", "http://a/1"])  # in-batch dup
-    add_and_run(["http://a/2", "http://b/9"])  # cross-batch dup + new
-    add_and_run(["http://b/9", "http://c/7", "http://a/1"])  # more dups
+    def seen_urls():
+        seen = TableIO(root).read(spark, "seen")
+        return sorted(r["url"] for r in seen.select("url").collect())
 
-    io = TableIO(root)
-    seen = io.read(spark, "seen")
-    urls = sorted(r["url"] for r in seen.select("url").collect())
-    assert urls == sorted(
-        ["http://a/1", "http://a/2", "http://b/9", "http://c/7"]
-    )  # exactly the distinct set, each once
+    add_and_run(["http://a/1", "http://a/2", "http://a/1"])  # in-batch dup
+    assert seen_urls() == ["http://a/1", "http://a/2"]
+    add_and_run(["http://a/2", "http://b/9"])  # cross-batch dup + new
+    assert seen_urls() == ["http://a/1", "http://a/2", "http://b/9"]
+    add_and_run(["http://b/9", "http://c/7", "http://a/1"])  # more dups
+    # exactly the distinct set, each once
+    assert seen_urls() == [
+        "http://a/1", "http://a/2", "http://b/9", "http://c/7"
+    ]
 
 
 def test_stateful_seen_flag_dedups_across_arrow_chunks(spark):

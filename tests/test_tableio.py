@@ -27,7 +27,7 @@ def test_append_chain_and_compact(spark, tmp_path):
     io.write("t", spark.range(6, 10), mode="append")
     df = io.read(spark, "t")
     assert sorted(r.id for r in df.collect()) == list(range(10))
-    io.compact(spark, "t")
+    io.compact_small(spark, "t", max_bytes=None)
     df2 = io.read(spark, "t")
     assert sorted(r.id for r in df2.collect()) == list(range(10))
     # compacted snapshot reads from a single dir
@@ -75,9 +75,7 @@ def test_empty_partitioned_write_is_readable(spark, tmp_path):
 def test_empty_dirs_recorded_in_manifest_not_rewalked(spark, tmp_path, monkeypatch):
     """Parquet-less dirs are recorded at COMMIT time (empty_dirs);
     read() must not walk data dirs when the manifest carries the record
-    (the crawl reads frontier/seen/filter every superstep). Legacy
-    manifests without the key still work via the one-time write-side
-    upgrade walk."""
+    (the crawl reads frontier/seen/filter every superstep)."""
     from pyspark.sql import functions as F
 
     io = TableIO(str(tmp_path))
@@ -90,23 +88,12 @@ def test_empty_dirs_recorded_in_manifest_not_rewalked(spark, tmp_path, monkeypat
     entry = io._entry("t")
     assert len(entry["empty_dirs"]) == 1
     assert entry["empty_dirs"][0] == entry["dirs"][-1]
-    # upgraded manifest: read() needs no filesystem walk at all
+    # read() needs no filesystem walk at all
     monkeypatch.setattr(
         TableIO, "_has_data_files",
         staticmethod(lambda d: (_ for _ in ()).throw(AssertionError("walked"))),
     )
     assert io.read(spark, "t").count() == 4
-    monkeypatch.undo()
-    # legacy manifest (no key): falls back to walking, still correct
-    m = io._load_manifest("t")
-    for v in m["versions"]:
-        v.pop("empty_dirs", None)
-    io._commit_manifest("t", m)
-    assert io.read(spark, "t").count() == 4
-    # and the next append upgrades it back
-    io.write("t", full, mode="append", partition_by=["shard"])
-    assert "empty_dirs" in io._entry("t")
-    assert io.read(spark, "t").count() == 8
 
 
 def test_expire_versions_truncates_history_and_deletes_dirs(spark, tmp_path):
