@@ -372,7 +372,7 @@ class CrawlJob:
     seen-set layout num_shards/capacity_per_shard/layout_epoch), docs,
     seen, filter (append-only step-tagged dirty-shard rows) and postings.
     A resume restores the layout from the frontier meta and raises when
-    the meta lacks it.
+    the meta lacks it or names another attr law.
     """
 
     def __init__(
@@ -417,13 +417,20 @@ class CrawlJob:
             self.capacity = self._restore_layout(
                 meta, "capacity_per_shard", capacity_per_shard
             )
+            # the frontier stores priority/budget derived from the host
+            # under the attribute law its tag names
+            if meta.get("attr_law") != wm.ATTR_LAW:
+                raise ValueError(
+                    f"crawl root frontier meta has attr_law="
+                    f"{meta.get('attr_law')!r}; resuming under attr_law="
+                    f"{wm.ATTR_LAW!r} would mix two laws in the stored "
+                    "host priority/budget"
+                )
             # layout epoch: bumped by migrate_layout; tables written with
             # a HIGHER epoch than the committed frontier's are orphans of
             # a migration that never reached its commit point
             self.layout_epoch = int(meta.get("layout_epoch", 0))
             self._revert_orphans()
-            if meta.get("attr_law") != wm.ATTR_LAW:
-                self._migrate_attr_law(meta)
         elif seeds is not None:
             self.cfg = cfg or wm.DEFAULT
             # at bootstrap the chosen values (explicit or default) DEFINE
@@ -515,7 +522,7 @@ class CrawlJob:
         io = TableIO(root)
         if not io.exists("frontier"):
             raise FileNotFoundError(f"no crawl root at {root}")
-        # resume first: runs orphan-revert + attr-law migration, and
+        # resume first: checks the attr law, runs orphan-revert, and
         # resolves (or rejects) the stored layout
         job = cls(spark, root)
         new_shards = job.num_shards if num_shards is None else int(num_shards)
@@ -735,29 +742,6 @@ class CrawlJob:
             "metrics": dict(metrics),
             **self._layout_meta(),
         }
-
-    def _migrate_attr_law(self, frontier_meta: dict) -> None:
-        """Re-derive persisted priority/budget after an attribute-law
-        change (webmodel.ATTR_LAW differs from the root's stored tag).
-
-        Frontier rows STORE derived attrs; without this, a resumed
-        pre-change root would mix two laws for the same host — inconsistent
-        per-host budget cutoffs in select_fetch_batch and divergence from
-        the (all-current-law) replay simulator. Attrs are pure functions of
-        the host string, so migration is one projection, committed with
-        the new attr_law tag in the same frontier snapshot."""
-        prio, budget = host_attr_cols(self.cfg)
-        fr = self.io.read(self.spark, "frontier").select(
-            "url",
-            "host",
-            "depth",
-            prio.alias("priority"),
-            budget.alias("budget"),
-            "discovered_step",
-        )
-        self.io.write(
-            "frontier", fr, meta={**frontier_meta, **self._layout_meta()}
-        )
 
     # -- bootstrap ----------------------------------------------------
     def _bootstrap(self, seeds: list[str]) -> None:

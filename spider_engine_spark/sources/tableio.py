@@ -289,7 +289,6 @@ class TableIO:
         max_bytes: int | None = 64 << 20,
         meta: dict | None = None,
         transform=None,
-        partition_by: list[str] | None = None,
     ) -> int | None:
         """Incremental merge planner: fold only data dirs < max_bytes into
         one new dir; dirs >= max_bytes are referenced untouched by the new
@@ -299,12 +298,11 @@ class TableIO:
         fewer than two dirs qualify (nothing to merge).
 
         transform: optional DataFrame->DataFrame applied to the merged
-        small-dir union (e.g. postings re-grouping).  partition_by
-        defaults to the table's recorded hive layout so compaction
-        never silently flattens a partitioned table."""
+        small-dir union (e.g. postings re-grouping). The merged dir
+        keeps the table's recorded hive layout, so compaction never
+        flattens a partitioned table."""
         entry = self._entry(name)
-        if partition_by is None:
-            partition_by = entry.get("partition_by")
+        partition_by = entry.get("partition_by")
         # parquet-less dirs (empty dynamic-partition snapshots, see
         # read()) hold nothing to merge and cannot be scanned — drop
         # them from the fold AND from the new snapshot's dir list
@@ -348,7 +346,6 @@ class TableIO:
         every: int,
         max_bytes: int = 64 << 20,
         transform=None,
-        partition_by: list[str] | None = None,
     ) -> int | None:
         """Streaming compaction-boundary guard — THE shared law for
         foreachBatch handlers (streaming/ingest.py, streaming/neardup.py):
@@ -381,7 +378,6 @@ class TableIO:
             max_bytes=max_bytes,
             meta={**m, "batch_id": max(batch_id, cur), "compacted": True},
             transform=transform,
-            partition_by=partition_by,
         )
 
     def _append_version_of(self, name: str, entry: dict, meta: dict) -> int:

@@ -60,12 +60,10 @@ def host_name(hid: int) -> str:
 
 
 # Version tag of the politeness/priority attribute law, persisted in the
-# frontier snapshot meta. Frontier rows and the hosts cache STORE derived
-# priority/budget values; if the law changes, a resumed root would mix
-# two laws for the same host (inconsistent per-host budget cutoffs,
-# replay divergence). CrawlJob re-derives persisted attrs on resume when
-# the stored tag differs (pure functions of host — a one-projection
-# migration).
+# frontier snapshot meta. Frontier rows STORE derived priority/budget
+# values; if the law changes, a resumed root would mix two laws for the
+# same host (inconsistent per-host budget cutoffs, replay divergence).
+# CrawlJob refuses to resume a root whose stored tag differs.
 ATTR_LAW = "md5h60"
 
 

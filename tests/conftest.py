@@ -46,6 +46,38 @@ def leaf_metrics(df) -> list[dict[str, int]]:
     return out
 
 
+def in_job_group(spark, fn):
+    """Run fn() under a Spark job group of its own: (its result, the ids
+    of the jobs it ran, the plan nodes of those jobs' SQL executions
+    that evaluate Python, i.e. carry a "data sent to Python workers"
+    metric)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    python_nodes = 0
+    it = store.executionsList().iterator()
+    while jobs and it.hasNext():
+        e = it.next()
+        if not any(e.jobs().contains(j) for j in jobs):
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes().iterator()
+        while nodes.hasNext():
+            metrics = nodes.next().metrics().iterator()
+            while metrics.hasNext():
+                if metrics.next().name() == "data sent to Python workers":
+                    python_nodes += 1
+    return out, jobs, python_nodes
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

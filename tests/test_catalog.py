@@ -10,6 +10,8 @@ import pytest
 from spider_engine_spark.operators.search import SearchFilter
 from spider_engine_spark.plans.catalog import Catalog
 
+from conftest import in_job_group
+
 FIELDS = {
     "user_id": "primary",
     "user_name": "whole",
@@ -567,8 +569,6 @@ def test_search_is_one_lazy_plan(cat, spark):
     """For a term, '', OR and AND, Table.search builds its frame without
     running a Spark job, collecting it caches nothing, and the executed
     plan has no range exchange and no cached-frame scan."""
-    import uuid
-
     sc = spark.sparkContext
     t = cat.create_table(
         "db1", "lazyplan", {"k": "primary", "body": "words", "n": "number"}
@@ -583,16 +583,11 @@ def test_search_is_one_lazy_plan(cat, spark):
         ("red", "or"), ("", "or"), (["red", "dog"], "or"),
         (["red", "dog"], "and"),
     ):
-        group = f"search-plan-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "search planning")
-        try:
-            frame = t.search(
-                kw, field="body", mode=mode, size=1, keep_total=True,
-                filters=[SearchFilter("n", ">", value=3)],  # >= 3
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert sc.statusTracker().getJobIdsForGroup(group) == [], kw
+        frame, jobs, _ = in_job_group(spark, lambda: t.search(
+            kw, field="body", mode=mode, size=1, keep_total=True,
+            filters=[SearchFilter("n", ">", value=3)],  # >= 3
+        ))
+        assert jobs == [], kw
         persisted = len(sc._jsc.getPersistentRDDs())
         rows = frame.collect()
         assert [(r["k"], r["_total"]) for r in rows] == [("3", 1)], kw
@@ -667,37 +662,6 @@ SERVE_FIELDS = {
 }
 
 
-def _in_job_group(spark, fn) -> tuple[int, int]:
-    """Run fn under a fresh job group: (jobs run, plan nodes in the
-    group's SQL executions that evaluate Python — any node that carries
-    a "data sent to Python workers" metric)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"add-plan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "add plan")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    store = spark._jsparkSession.sharedState().statusStore()
-    python_nodes = 0
-    it = store.executionsList().iterator()
-    while it.hasNext():
-        e = it.next()
-        if not any(e.jobs().contains(j) for j in jobs):
-            continue
-        nodes = store.planGraph(e.executionId()).allNodes().iterator()
-        while nodes.hasNext():
-            metrics = nodes.next().metrics().iterator()
-            while metrics.hasNext():
-                if metrics.next().name() == "data sent to Python workers":
-                    python_nodes += 1
-    return len(jobs), python_nodes
-
-
 def test_ascii_add_plans_no_python_tokenizer(cat, spark):
     """On a serve-shaped table an all-ASCII one-row add runs no Python
     node and at most 12 jobs; a CJK add still plans the pandas-UDF
@@ -711,12 +675,12 @@ def test_ascii_add_plans_no_python_tokenizer(cat, spark):
     t.add_docs(seed)
     row = {"key": "ascii", "text": "one more ascii row", "lang": "en",
            "source": "web", "n_chars": 18}
-    jobs, python_nodes = _in_job_group(spark, lambda: t.add_docs([row]))
+    _, jobs, python_nodes = in_job_group(spark, lambda: t.add_docs([row]))
     assert python_nodes == 0
-    assert jobs <= 12, jobs
+    assert len(jobs) <= 12, jobs
     cjk = {"key": "cjk", "text": "喜欢美食 spark", "lang": "zh",
            "source": "web", "n_chars": 8}
-    _, python_nodes = _in_job_group(spark, lambda: t.add_docs([cjk]))
+    _, _, python_nodes = in_job_group(spark, lambda: t.add_docs([cjk]))
     assert python_nodes > 0
     assert _postings_of(t) == _python_postings(t, seed + [row, cjk])
 

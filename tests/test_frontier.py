@@ -276,43 +276,27 @@ def test_filter_writes_only_dirty_shards(spark, tmp_path_factory):
 
 
 def test_attr_law_migration_on_resume(spark, tmp_path_factory):
-    """A crawl root persisted under an older attribute law must not mix
-    laws on resume: CrawlJob re-derives the frontier's priority/budget
-    when the stored attr_law tag differs, and the continued crawl
-    matches the all-current-law simulator."""
-    seeds = wm.seed_urls(8)
+    """A crawl root whose frontier meta names another attribute law (or
+    none) stores priority/budget a resume would mix with this code's:
+    CrawlJob raises ValueError naming attr_law and leaves the root as
+    it was."""
     root = str(tmp_path_factory.mktemp("lawmig"))
     job = CrawlJob(
-        spark, root, seeds=seeds, num_shards=2, salts=2, index=False
+        spark, root, seeds=wm.seed_urls(8), num_shards=2, salts=2, index=False
     )
     job.run(1)
-
-    # simulate a pre-change root: corrupt the derived attrs and strip the
-    # law tag (as if written under the old blake2b law)
     io = job.io
     fmeta = dict(io.meta("frontier"))
-    fmeta.pop("attr_law")
-    wrong = io.read(spark, "frontier").select(
-        "url", "host", "depth",
-        (F.col("priority") + 1).alias("priority"),
-        (F.col("budget") + 7).alias("budget"),
-        "discovered_step",
-    )
-    io.write("frontier", wrong, meta=fmeta)
-
-    # resume: migration must re-derive every stored attr from the host
-    job2 = CrawlJob(spark, root, num_shards=2, salts=2, index=False)
-    assert io.meta("frontier").get("attr_law") == wm.ATTR_LAW
-    for r in io.read(spark, "frontier").collect():
-        assert r["priority"] == wm.host_priority(r["host"])
-        assert r["budget"] == wm.host_budget(r["host"], job2.cfg)
-
-    # and the continued crawl replays exactly against the simulator
-    job2.run(2)
-    sim = ReplaySimulator(seeds)
-    sim.run(3)
-    assert fetched_urls_by_step(job2) == sim.fetched_by_step
-    assert seen_urls(job2) == sim.seen
+    for law in (None, "blake2b"):
+        if law is None:
+            fmeta.pop("attr_law")
+        else:
+            fmeta["attr_law"] = law
+        io.commit_meta("frontier", fmeta)
+        version = io._load_manifest("frontier")["versions"][-1]["version"]
+        with pytest.raises(ValueError, match="attr_law"):
+            CrawlJob(spark, root, num_shards=2, salts=2, index=False)
+        assert io._load_manifest("frontier")["versions"][-1]["version"] == version
 
 
 def test_resume_restores_sharding_layout(spark, tmp_path_factory):

@@ -6,6 +6,8 @@ import pytest
 
 from spider_engine_spark.sources.tableio import TableIO
 
+from conftest import in_job_group
+
 
 def test_overwrite_versions_and_time_travel(spark, tmp_path):
     io = TableIO(str(tmp_path))
@@ -64,8 +66,7 @@ def test_empty_partitioned_write_is_readable(spark, tmp_path):
     assert io.read(spark, "t").count() == 6
     # compaction skips (and drops) the parquet-less dir
     io.write("t", full, mode="append", partition_by=["shard"])
-    v = io.compact_small(spark, "t", max_bytes=1 << 60,
-                         partition_by=["shard"])
+    v = io.compact_small(spark, "t", max_bytes=1 << 60)
     assert v is not None
     assert io.read(spark, "t").count() == 12
     for d in io._entry("t")["dirs"]:
@@ -149,21 +150,6 @@ def _inferred_read(spark, io, name):
     return out
 
 
-def _jobs_while(spark, build):
-    """(build(), ids of the Spark jobs that ran while it built): the
-    status store's jobs of a job group set for the call alone."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"read-plan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "read planning")
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
 def _rows(df):
     return sorted(
         (tuple(r) for r in df.select(*sorted(df.columns)).collect()), key=repr
@@ -189,7 +175,7 @@ def test_manifest_read_matches_inferred_read(spark, tmp_path):
         "t", full.withColumn("id", F.col("id") + 100), mode="append",
         partition_by=["b"],
     )
-    got, jobs = _jobs_while(spark, lambda: io.read(spark, "t"))
+    got, jobs, _ = in_job_group(spark, lambda: io.read(spark, "t"))
     assert jobs == []
     ref = _inferred_read(spark, io, "t")
     assert got.schema == ref.schema  # names, order, types, nullability
@@ -201,7 +187,7 @@ def test_manifest_read_matches_inferred_read(spark, tmp_path):
         full.withColumn("id", F.col("id") + 200).withColumn("extra", F.lit("e")),
         mode="append", partition_by=["b"],
     )
-    got, jobs = _jobs_while(spark, lambda: io.read(spark, "t"))
+    got, jobs, _ = in_job_group(spark, lambda: io.read(spark, "t"))
     assert jobs == []
     ref = _inferred_read(spark, io, "t")
     assert sorted(got.schema.fields, key=lambda f: f.name) == sorted(
@@ -216,7 +202,7 @@ def test_manifest_read_matches_inferred_read(spark, tmp_path):
     # unpartitioned (the catalog base after an ALTER): identical order
     io.write("u", full)
     io.write("u", full.withColumn("extra", F.lit(7)), mode="append")
-    got, jobs = _jobs_while(spark, lambda: io.read(spark, "u"))
+    got, jobs, _ = in_job_group(spark, lambda: io.read(spark, "u"))
     assert jobs == []
     ref = _inferred_read(spark, io, "u")
     assert got.schema == ref.schema
@@ -239,7 +225,7 @@ def test_partition_values_read_opens_only_named_buckets(spark, tmp_path):
         df.filter(F.col("term_bucket") < 8).withColumn("id", F.col("id") + 1000),
         mode="append", partition_by=["term_bucket"],
     )
-    got, jobs = _jobs_while(
+    got, jobs, _ = in_job_group(
         spark, lambda: io.read(spark, "p", partition_values={3, 40, 99})
     )
     assert jobs == []
@@ -250,10 +236,10 @@ def test_partition_values_read_opens_only_named_buckets(spark, tmp_path):
 
     # the unpruned read still lists the 64 bucket dirs with a Spark job
     # (above the 32-path parallel-listing threshold): what pruning avoids
-    _, jobs = _jobs_while(spark, lambda: io.read(spark, "p"))
+    _, jobs, _ = in_job_group(spark, lambda: io.read(spark, "p"))
     assert jobs
 
-    none, jobs = _jobs_while(
+    none, jobs, _ = in_job_group(
         spark, lambda: io.read(spark, "p", partition_values=set())
     )
     assert jobs == [] and none.count() == 0
